@@ -534,8 +534,14 @@ def refresh_tier_incremental(
     scan is also partition-pruned to the batch's dates.
 
     ``include_untouched=False`` returns only the refreshed buckets — the
-    delta a production writer feeds to a dynamic-partition overwrite or
-    Iceberg MERGE, instead of rewriting the whole tier.
+    delta a production writer feeds to a bucket-level MERGE (Iceberg),
+    instead of rewriting the whole tier.
+
+    This is the in-memory merge (a committed tier DataFrame in, the
+    refreshed tier out).  Writers of the date-partitioned tier store use
+    ``stream_tier.refresh_tier_store`` instead: its dynamic overwrite
+    replaces whole touched dates, so it re-aggregates those dates with
+    the batch in one shuffle and needs neither broadcast join.
     """
     delta = rollup_points(new_points, tier_seconds, keys, ts_col, value_col)
     on = [*keys, "bucket_ts"]

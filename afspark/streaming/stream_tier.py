@@ -4,10 +4,12 @@ stream_rollup_1m (stream_rollup.py) is the pure watermarked-aggregation
 twin, but it cannot carry order-dependent aggregates (first/last) and its
 complete-mode state grows with the tier.  This module is the production
 shape instead: each micro-batch runs BATCH code (foreachBatch), merging
-the batch's partial aggregates into a persistent, date-partitioned tier
-store with refresh_tier_incremental — full tier schema including
-first/last, bounded state (the store is on disk, not in the stream), and
-arbitrarily late data handled by the same algebra as the batch OoO path.
+the batch into a persistent, date-partitioned tier store with
+refresh_tier_store — one shuffle that re-aggregates the batch's points
+together with the committed rows of every date the batch touches.  Full
+tier schema including first/last, bounded state (the store is on disk,
+not in the stream), and arbitrarily late data handled by the same
+associative algebra as refresh_tier_incremental and the batch OoO path.
 
 Delivery semantics: foreachBatch may redeliver a batch after a failure;
 the merge is NOT idempotent (counts would double), so batch ids are
@@ -47,6 +49,55 @@ def read_tier_store(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(TIER_SCHEMA + ", bucket_date date").parquet(path)
 
 
+def _merge_tier_rows(
+    committed: DataFrame,
+    new_points: DataFrame,
+    tier_seconds: int,
+    keys: list[str],
+    n_dates: int,
+) -> DataFrame:
+    """Committed tier rows (with ``bucket_date``) + raw points -> the merged
+    rows of every touched date, in one shuffle.
+
+    Each point becomes a one-point tier row: ``cnt`` 1 for a non-null value
+    else 0, ``sum/min/max/first/last`` = value, ``first_ts/last_ts`` = ts —
+    what ``rollup_points`` gives for that point alone.  ``rollup_tier`` over
+    (bucket_date, keys, bucket_ts) then merges them with the committed rows.
+    An untouched bucket is one committed row, and re-aggregating one row
+    returns it bit for bit.
+    """
+    from ..operators.rollup import bucket_ts, rollup_tier
+
+    v, ts = F.col("value"), F.col("ts")
+    bucket = bucket_ts(ts, tier_seconds)
+    batch_rows = new_points.select(
+        *keys,
+        bucket.alias("bucket_ts"),
+        v.isNotNull().cast("long").alias("cnt"),
+        v.alias("sum"),
+        v.alias("min"),
+        v.alias("max"),
+        v.alias("first"),
+        v.alias("last"),
+        ts.alias("first_ts"),
+        ts.alias("last_ts"),
+        F.to_date(bucket).alias("bucket_date"),
+    )
+    merged = committed.select(*batch_rows.columns).unionByName(batch_rows)
+    # LOAD-BEARING shuffle (see chunkstore.compact_chunks): the store
+    # writer reads and dynamically overwrites the same path; this
+    # repartition is the merge's only Exchange and materializes every
+    # committed row into shuffle files before the overwrite deletes their
+    # source partitions.  Do not refactor to coalesce()/no-shuffle.  The
+    # aggregate reuses the bucket_date clustering (no second Exchange),
+    # which also keeps each date in one task, so one file per date.
+    return rollup_tier(
+        merged.repartition(n_dates, "bucket_date"),
+        tier_seconds,  # re-floor of a floored bucket_ts: identity
+        ["bucket_date", *keys],
+    )
+
+
 def refresh_tier_store(
     spark: SparkSession,
     path: str,
@@ -58,11 +109,17 @@ def refresh_tier_store(
 
     Touched dates are derived from the batch (tiny collect of distinct
     bucket dates); the committed read is partition-pruned to those dates;
-    the refreshed subset replaces exactly those partitions via dynamic
-    overwrite.  Untouched date partitions are never read or written.
+    ``_merge_tier_rows`` re-aggregates those dates' committed rows with the
+    batch in one shuffle, and the result replaces exactly those partitions
+    via dynamic overwrite.  Untouched date partitions are never read or
+    written.
+
+    The writer rewrites whole date partitions anyway, so unlike
+    ``refresh_tier_incremental`` it needs no touched-bucket locate
+    (broadcast semi/anti-join) and no separate delta aggregate.
     Returns the number of touched date partitions.
     """
-    from ..operators.rollup import bucket_ts, refresh_tier_incremental
+    from ..operators.rollup import bucket_ts
 
     new_points = new_points.persist()
     try:
@@ -78,24 +135,14 @@ def refresh_tier_store(
             return 0
         committed = read_tier_store(spark, path).filter(
             F.col("bucket_date").isin(dates)
-        ).drop("bucket_date")
-        refreshed = refresh_tier_incremental(
-            committed, new_points, tier_seconds, keys
-        ).withColumn("bucket_date", F.to_date("bucket_ts"))
+        )
+        merged = _merge_tier_rows(committed, new_points, tier_seconds, keys, len(dates))
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            # LOAD-BEARING shuffle (see chunkstore.compact_chunks): the
-            # job reads and dynamically overwrites the same path; the
-            # repartition materializes the committed rows into shuffle
-            # files before the overwrite deletes their source partitions.
-            # Do not refactor to coalesce()/no-shuffle.
-            (
-                refreshed.repartition(max(1, len(dates)), "bucket_date")
-                .write.mode("overwrite")
-                .partitionBy("bucket_date")
-                .parquet(path)
-            )
+            # LOAD-BEARING shuffle (see _merge_tier_rows): the job reads
+            # and dynamically overwrites the same path.
+            merged.write.mode("overwrite").partitionBy("bucket_date").parquet(path)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         return len(dates)

@@ -178,6 +178,222 @@ def test_tier_store_journal_lock_excludes_second_writer(spark, sf_dir, tmpdir):
     assert apply_batch_once(spark, store, ev, 1, TIERS["1h"], lineage="ckpt-A")
 
 
+TIER_COLS = ("cnt", "sum", "min", "max", "avg", "first", "last", "first_ts", "last_ts")
+
+
+def _tier_rows(df):
+    """(series_id, bucket_ts) -> the other nine tier columns."""
+    return {
+        (r.series_id, r.bucket_ts): tuple(r[c] for c in TIER_COLS)
+        for r in df.collect()
+    }
+
+
+def _grid_points(spark, seed, days=(1, 2), minutes=range(0, 60, 7)):
+    """Two series, two points per 1m bucket, over ``days`` of Jan 2024.
+    Values are multiples of 1/16, so every sum is exact in float64, and
+    each timestamp is unique, so first/last are unambiguous."""
+    import datetime as dtm
+
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = [
+        (sid, dtm.datetime(2024, 1, d, h, m, sec), float(rng.integers(-800, 800)) / 16)
+        for sid in ("a", "b")
+        for d in days
+        for h in (0, 13)
+        for m in minutes
+        for sec in (10, 40)
+    ]
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def _store_files(store):
+    from pathlib import Path
+
+    return {
+        str(p): p.stat().st_mtime_ns
+        for p in Path(store).rglob("*")
+        if p.is_file() and p.name.startswith("part-")
+    }
+
+
+def test_tier_store_merge_is_one_shuffle_without_joins(spark, tmpdir):
+    """The store merge re-aggregates the touched dates in ONE Exchange
+    (hash on bucket_date; the aggregate reuses that clustering), with no
+    broadcast locate/anti-join, and one apply_batch_once on an existing
+    store runs at most 5 Spark jobs."""
+    import re
+
+    from afspark.streaming.stream_tier import (
+        _merge_tier_rows, apply_batch_once, read_tier_store,
+    )
+
+    store = f"{tmpdir}/tier1m"
+    assert apply_batch_once(spark, store, _grid_points(spark, 1), 0, 60)
+    batch = _grid_points(spark, 2, minutes=(3,))
+
+    committed = read_tier_store(spark, store).filter(
+        F.col("bucket_date").isin("2024-01-01", "2024-01-02")
+    )
+    plan = _merge_tier_rows(committed, batch, 60, ["series_id"], 2)._jdf \
+        .queryExecution().executedPlan().toString()
+    exchanges = [ln for ln in plan.splitlines() if re.search(r"\bExchange\b", ln)]
+    assert len(exchanges) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(bucket_date#\d+, 2\)", exchanges[0])
+    for node in ("BroadcastHashJoin", "BroadcastExchange", "LeftSemi", "LeftAnti"):
+        assert node not in plan, node
+
+    sc = spark.sparkContext
+    group = "tier-store-merge-jobs"
+    sc.setJobGroup(group, "one apply_batch_once on an existing store")
+    try:
+        assert apply_batch_once(spark, store, batch, 1, 60)
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(jobs) <= 5, len(jobs)
+
+
+def test_tier_store_merge_keeps_untouched_buckets_of_a_touched_date(spark, tmpdir):
+    """A batch that touches one bucket of a date rewrites the whole date;
+    every other bucket of that date stays identical in all 11 tier columns
+    (bit for bit, avg/first/last included), and the store equals a full
+    rollup_points recompute."""
+    import datetime as dtm
+
+    from afspark.operators.rollup import rollup_points
+    from afspark.streaming.stream_tier import apply_batch_once, read_tier_store
+
+    base = _grid_points(spark, 3)
+    store = f"{tmpdir}/tier1m"
+    assert apply_batch_once(spark, store, base, 0, 60)
+    before = _tier_rows(read_tier_store(spark, store))
+
+    touched = ("a", dtm.datetime(2024, 1, 2, 13, 14))
+    assert touched in before
+    batch = spark.createDataFrame(
+        [("a", dtm.datetime(2024, 1, 2, 13, 14, 25), 2.5)], SCHEMA
+    )
+    assert apply_batch_once(spark, store, batch, 1, 60)
+    after = _tier_rows(read_tier_store(spark, store))
+
+    assert set(after) == set(before)
+    for k in before:
+        if k != touched:
+            assert after[k] == before[k], k
+    assert after[touched] != before[touched]
+    assert after == _tier_rows(rollup_points(base.unionByName(batch), 60))
+
+
+def test_tier_store_late_point_becomes_first(spark, tmpdir):
+    """A late point older than the committed first_ts of its bucket becomes
+    that bucket's first (and first_ts); last is kept."""
+    import datetime as dtm
+
+    from afspark.operators.rollup import rollup_points
+    from afspark.streaming.stream_tier import apply_batch_once, read_tier_store
+
+    base = _grid_points(spark, 4)
+    store = f"{tmpdir}/tier1m"
+    assert apply_batch_once(spark, store, base, 0, 60)
+    key = ("b", dtm.datetime(2024, 1, 1, 0, 21))
+    before = _tier_rows(read_tier_store(spark, store))[key]
+    late_ts = dtm.datetime(2024, 1, 1, 0, 21, 2)
+    assert late_ts < before[TIER_COLS.index("first_ts")]
+
+    late = spark.createDataFrame([("b", late_ts, 99.0)], SCHEMA)
+    assert apply_batch_once(spark, store, late, 1, 60)
+    got = _tier_rows(read_tier_store(spark, store))
+    row = dict(zip(TIER_COLS, got[key]))
+    assert row["first"] == 99.0 and row["first_ts"] == late_ts
+    assert row["last"] == before[TIER_COLS.index("last")]
+    assert got == _tier_rows(rollup_points(base.unionByName(late), 60))
+
+
+def test_tier_store_null_value_matches_rollup_points(spark, tmpdir):
+    """A null value counts toward first_ts/last_ts but not cnt, exactly
+    as rollup_points treats it — in an existing bucket and in a bucket
+    holding only the null point."""
+    import datetime as dtm
+
+    from afspark.operators.rollup import rollup_points
+    from afspark.streaming.stream_tier import apply_batch_once, read_tier_store
+
+    base = _grid_points(spark, 5)
+    store = f"{tmpdir}/tier1m"
+    assert apply_batch_once(spark, store, base, 0, 60)
+    nulls = spark.createDataFrame(
+        [
+            ("a", dtm.datetime(2024, 1, 1, 0, 7, 1), None),   # before first_ts
+            ("a", dtm.datetime(2024, 1, 1, 0, 8, 30), None),  # new bucket
+        ],
+        SCHEMA,
+    )
+    assert apply_batch_once(spark, store, nulls, 1, 60)
+    got = _tier_rows(read_tier_store(spark, store))
+    assert got == _tier_rows(rollup_points(base.unionByName(nulls), 60))
+    lone = dict(zip(TIER_COLS, got[("a", dtm.datetime(2024, 1, 1, 0, 8))]))
+    assert lone["cnt"] == 0 and lone["sum"] is None and lone["first"] is None
+
+
+def test_tier_store_empty_batch_writes_nothing(spark, tmpdir):
+    """An empty batch touches no date: refresh returns 0, creates no store
+    and rewrites no file of an existing one."""
+    from pathlib import Path
+
+    from afspark.streaming.stream_tier import refresh_tier_store
+
+    empty = spark.createDataFrame([], SCHEMA)
+    fresh = f"{tmpdir}/fresh"
+    assert refresh_tier_store(spark, fresh, empty, 60) == 0
+    assert not Path(fresh).exists()
+
+    store = f"{tmpdir}/tier1m"
+    assert refresh_tier_store(spark, store, _grid_points(spark, 6), 60) == 2
+    files = _store_files(store)
+    assert files
+    assert refresh_tier_store(spark, store, empty, 60) == 0
+    assert _store_files(store) == files
+
+
+def test_stream_to_tier_store_restart_is_exactly_once(spark, tmpdir):
+    """The production entrypoint end to end: parquet files stream into the
+    tier store; after a stop, new files and a restart on the same
+    checkpoint, the store equals rollup_points over every file — nothing
+    is dropped or counted twice."""
+    import json
+    from pathlib import Path
+
+    from afspark.operators.rollup import rollup_points
+    from afspark.streaming.stream_tier import read_tier_store, stream_to_tier_store
+
+    src, store, ckpt = f"{tmpdir}/in", f"{tmpdir}/tier1m", f"{tmpdir}/ckpt"
+    first = _grid_points(spark, 7, days=(1,))
+    later = _grid_points(spark, 8, days=(1, 2), minutes=(5, 50))
+    first.coalesce(1).write.parquet(src)
+
+    def run():
+        q = stream_to_tier_store(spark, src, SCHEMA, store, ckpt, tier_seconds=60)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run()
+    assert _tier_rows(read_tier_store(spark, store)) == _tier_rows(rollup_points(first, 60))
+    later.coalesce(1).write.mode("append").parquet(src)
+    run()
+
+    got = _tier_rows(read_tier_store(spark, store))
+    assert got == _tier_rows(rollup_points(first.unionByName(later), 60))
+    journal = json.loads((Path(store) / "_applied_batches.json").read_text())
+    assert journal["lineage"] == ckpt
+    assert set(journal["batches"].values()) == {"committed"}
+    assert len(journal["batches"]) == 2
+
+
 def _write_sample_files(src, series, cuts):
     """Write len(cuts)-1 sequential parquet files of (series_id, seq, value)
     rows, mtime-spaced so the file source processes them in order."""
