@@ -14,7 +14,6 @@ operators/   DataFrame operators: windows, score, rollup (incl. incremental
              (counter rate, z-score anomalies), asof, sessions, rangejoin,
              lttb, dedup, similarity, text, multimodal
 sources/     deterministic pages/samples generators, chunk store
-plans/       planner heuristics (assembly strategy, salting)
 streaming/   checkpoint/lineage + resume
 """
 

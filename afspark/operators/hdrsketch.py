@@ -167,7 +167,6 @@ def hdr_refresh_incremental(
     ts_col: str = "ts",
     value_col: str = "value",
     subbuckets: int = SUBBUCKETS,
-    include_untouched: bool = True,
 ) -> DataFrame:
     """Incremental continuous-aggregate refresh of the sketch tier —
     the same TimescaleDB-style pattern as rollup.refresh_tier_incremental
@@ -178,9 +177,6 @@ def hdr_refresh_incremental(
     out-of-order / in-order batches alike because cells are plain
     associative counts (incremental == full rebuild, asserted bit-exact
     in tests/test_hdrsketch.py).
-
-    ``include_untouched=False`` returns only the refreshed buckets — the
-    delta for a dynamic-partition overwrite or MERGE writer.
     """
     delta = hdr_rollup(new_points, tier_seconds, keys, ts_col, value_col, subbuckets)
     on = [*keys, "bucket_ts"]
@@ -191,7 +187,5 @@ def hdr_refresh_incremental(
         .groupBy(*keys, "bucket_ts", "idx")
         .agg(F.sum("n").alias("n"))
     )
-    if not include_untouched:
-        return merged
     untouched = committed_cells.join(F.broadcast(touched), on, "left_anti")
     return untouched.unionByName(merged)

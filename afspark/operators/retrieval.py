@@ -8,13 +8,13 @@ BM25, the +1 idf variant Lucene uses so scores stay positive):
 
 Shape chosen for 100 TB, not translated from an inverted index:
 
-* ONE token-explode aggregation produces per-doc (dl, tf_t per query
-  term) — the query terms are a tiny fixed set, so tf lands as one
-  conditional-sum column per term in the SAME groupBy that counts dl.
-  No (doc x term) posting table, no doc-keyed join: a single shuffle on
-  doc_id with map-side partial aggregation.
+* Per-doc stats need no shuffle: each doc's tokens stay an in-row
+  array (no explode), and dl plus one tf_t column per query term (the
+  terms are a tiny fixed set) are array aggregates in one projection.
+  No (doc x term) posting table, no doc-keyed join.
 * Corpus stats (N, avgdl, df per term) reduce the per-doc frame to ONE
-  row, crossJoin-broadcast back — no second pass over the tokens.
+  row, cross-joined back as a broadcast — no second pass over the
+  tokens.
 * Top-k runs through TakeOrderedAndProject on the ROUNDED score (1e-6)
   with doc_id as tie-break, so the cut is reproducible across engines
   and partitionings (raw float order near the k-boundary is not).

@@ -513,7 +513,6 @@ def refresh_tier_incremental(
     keys: list[str] = ["series_id"],
     ts_col: str = "ts",
     value_col: str = "value",
-    include_untouched: bool = True,
 ) -> DataFrame:
     """Continuous-aggregate incremental refresh (TimescaleDB-style).
 
@@ -533,10 +532,6 @@ def refresh_tier_incremental(
     tier store, compose with ``ooo.pruned_store_scan`` so the committed
     scan is also partition-pruned to the batch's dates.
 
-    ``include_untouched=False`` returns only the refreshed buckets — the
-    delta a production writer feeds to a bucket-level MERGE (Iceberg),
-    instead of rewriting the whole tier.
-
     This is the in-memory merge (a committed tier DataFrame in, the
     refreshed tier out).  Writers of the date-partitioned tier store use
     ``stream_tier.refresh_tier_store`` instead: its dynamic overwrite
@@ -551,39 +546,8 @@ def refresh_tier_incremental(
         tier_seconds,  # re-floor of an already-floored bucket_ts: identity
         keys,
     )
-    if not include_untouched:
-        return merged
     untouched = committed.join(F.broadcast(touched), on, "left_anti")
     return untouched.unionByName(merged)
-
-
-def refresh_all_tiers_incremental(
-    committed: dict[str, DataFrame],
-    new_points: DataFrame,
-    keys: list[str] = ["series_id"],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiers: dict[str, int] = TIERS,
-) -> dict[str, DataFrame]:
-    """Refresh every retention tier from one new batch, independently.
-
-    Associativity means each tier merges the SAME batch at its own
-    resolution — no tier needs another tier's refreshed rows, so all four
-    refreshes share one scan of the (persisted) batch and run in parallel.
-
-    Cache lifetime: the batch persist is intentionally left to the
-    CALLER's session — the returned tier DataFrames are lazy and all read
-    it, so unpersisting here would defeat the shared scan.  Unpersist (or
-    let the ContextCleaner reclaim it) once every tier is materialized;
-    refresh_tier_store does exactly that in its try/finally.
-    """
-    new_points = new_points.persist()
-    return {
-        name: refresh_tier_incremental(
-            committed[name], new_points, sec, keys, ts_col, value_col
-        )
-        for name, sec in tiers.items()
-    }
 
 
 def realtime_cagg(
@@ -612,8 +576,10 @@ def realtime_cagg(
     the recent files are read and the on-the-fly aggregation is bounded
     by the refresh lag, not by history.  Late points BELOW the watermark
     are intentionally invisible here (exactly TimescaleDB's contract):
-    they surface through ``refresh_tier_incremental``'s invalidation
-    merge, which also advances the watermark.
+    they surface once merged into the committed tier — for a
+    date-partitioned tier store through ``stream_tier.refresh_tier_store``
+    (``apply_batch_once``), for an in-memory tier through
+    ``refresh_tier_incremental``.
     """
     wm = (int(watermark_epoch) // tier_seconds) * tier_seconds
     wm_ts = F.timestamp_seconds(F.lit(wm))

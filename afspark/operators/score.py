@@ -341,104 +341,3 @@ def score_wide(score_long: DataFrame) -> DataFrame:
         .pivot("feature")
         .agg(F.first("value"))
     )
-
-
-# features with pure-Catalyst windowed-aggregate twins (stay in
-# whole-stage codegen; no Python worker hop)
-_ALGEBRAIC = {"energy", "spl", "myriad", "zcr"}
-
-
-def score_auto(
-    samples: DataFrame,
-    features: Sequence[Feature] | Feature,
-    winlen: int,
-    noverlap: int = 0,
-    fs: float = 1.0,
-    **kwargs,
-) -> DataFrame:
-    """Planner-dispatched Score: Catalyst path when every requested
-    feature is algebraic and the planner deems replication cheap
-    (plans/planner.py), kernel path otherwise.  Output schema and window
-    semantics identical either way; Catalyst values match kernels to
-    float round-off (they reduce in different orders).
-
-    ZCR dispatches to its lag-based Catalyst twin (windows.py
-    zcr_windowed) and is unioned with the aggregate features' output.
-    Duplicate feature KEYS (e.g. two SoundPressureLevel refs) would
-    collide in the aggregate dict, so those fall back to the kernel path,
-    which evaluates each feature instance independently.
-    """
-    from ..plans.planner import choose_assembly
-    from .windows import (
-        energy_agg,
-        myriad_agg,
-        sliding_agg,
-        spl_agg,
-        tumbling_agg,
-        zcr_windowed,
-    )
-
-    if isinstance(features, Feature):
-        features = [features]
-    keys = [f.key for f in features]
-    algebraic = all(k in _ALGEBRAIC for k in keys)
-    if len(set(keys)) < len(keys):
-        return score(samples, features, winlen, noverlap, fs, **kwargs)
-    plan = choose_assembly(winlen, noverlap, algebraic)
-    if plan.strategy == "halo":
-        return score(samples, features, winlen, noverlap, fs, **kwargs)
-
-    aggs = {}
-    names = {}
-    zcr_feats = []
-    for f in features:
-        v = F.col("value")
-        if f.key == "energy":
-            aggs["energy"] = energy_agg(v)
-        elif f.key == "spl":
-            aggs["spl"] = spl_agg(v, f.ref)
-        elif f.key == "myriad":
-            if f.sq_kscale is None:
-                return score(samples, features, winlen, noverlap, fs, **kwargs)
-            aggs["myriad"] = myriad_agg(v, f.sq_kscale)
-        elif f.key == "zcr":
-            zcr_feats.append(f)
-            continue
-        names[list(aggs)[-1]] = f.names()[0]
-    sdf = samples.select(
-        F.col("series_id").cast("string").alias("series_id"),
-        F.col("seq").cast("long").alias("seq"),
-        F.col("value").cast("double").alias("value"),
-    )
-    outs = []
-    if aggs:
-        if plan.strategy == "tumbling":
-            wide = tumbling_agg(sdf, winlen, aggs)
-        else:
-            wide = sliding_agg(sdf, winlen, noverlap, aggs)
-        outs.append(
-            wide.select(
-                "series_id",
-                "win_start",
-                F.explode(
-                    F.map_from_arrays(
-                        F.array(*[F.lit(names[k]) for k in aggs]),
-                        F.array(*[F.col(k) for k in aggs]),
-                    )
-                ).alias("feature", "value"),
-            ).select("series_id", "win_start", "feature", "value")
-        )
-    for f in zcr_feats:
-        z = zcr_windowed(sdf, winlen, noverlap)
-        outs.append(
-            z.select(
-                "series_id",
-                "win_start",
-                F.lit(f.names()[0]).alias("feature"),
-                F.col("zcr").alias("value"),
-            )
-        )
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result

@@ -4,7 +4,7 @@ The reference's sliding partition (/root/reference/src/AcousticFeatures.jl:
 874,881,888): ``step = winlen - noverlap``; only full windows are kept
 (flush=false); 1-based window-start labels ``1, 1+step, ...``.
 
-Three Spark realizations, chosen by the planner (plans/planner.py):
+Three Spark realizations:
 
 1. ``tumbling_agg``      — noverlap == 0 and an algebraic feature: pure
    Catalyst hash aggregation, no data replication, whole-stage codegen.

@@ -77,7 +77,7 @@ def encode_chunks(
     # spark.sql.shuffle.partitions — the deployment's scale knob).  A
     # blanket x4 factor here cost +45% wall at sf0.1 (128 near-empty
     # shuffle partitions for a one-core-second encode — A/B'd interleaved
-    # at matched host probes, tools/ab_regressions.py).  The previous
+    # at matched host probes).  The previous
     # ``points.rdd.getNumPartitions()`` input-tracking term is GONE:
     # under AQE that call executes any upstream shuffle stages as a real
     # job just to read the partition count, so inputs that arrive through

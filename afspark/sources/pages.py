@@ -6,7 +6,7 @@ Input shape fixed by BASELINE.json input_hint:
 Generation is fully distributed (spark.range -> mapInPandas) and
 deterministic in the row id alone (splitmix64 mixing), so any partitioning
 produces the same table — no driver-side data, no external files.  A
-configurable hot-domain fraction exercises the skew/salting path.
+configurable hot-domain fraction exercises the skew path.
 
 text -> samples mapping (SURVEY.md §7.2): series_id = url domain; per
 series, pages are ordered by (warc_ts, url) and their ASCII text bytes are

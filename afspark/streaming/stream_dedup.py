@@ -79,22 +79,3 @@ def streaming_exact_dedup(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def run_dedup_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    checkpoint_dir: str,
-    query_name: str = "dedup_stream",
-):
-    """File-source stream -> stateful dedup -> in-memory append sink."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    deduped = streaming_exact_dedup(stream)
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

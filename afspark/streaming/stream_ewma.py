@@ -36,6 +36,57 @@ OUT_SCHEMA = "series_id string, ts timestamp, value double, ewma double"
 STATE_SCHEMA = "last double, n long, last_ts double"
 
 
+def _carry_per_series(
+    points: DataFrame,
+    step,
+    init: tuple,
+    out_schema: str,
+    state_schema: str,
+    series_col: str,
+    ts_col: str,
+    value_col: str,
+) -> DataFrame:
+    """The skeleton every operator here shares: per series, load the
+    carried state (``init`` for a fresh series), sort the micro-batch by
+    (ts, value), refuse data older than the carried last ts, run
+    ``step(carried, pdf, ts_us) -> (carried, columns)`` and emit
+    (series_id, ts, *columns) in append mode.
+
+    Each state schema ends in ``last_ts``; ``init`` holds the fields
+    before it (a fresh series' last_ts is -inf, which nothing precedes).
+    """
+
+    def fn(key, pdfs, state: GroupState):
+        series_id = key[0]
+        *carried, last_ts = state.get if state.exists else (*init, float("-inf"))
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
+            return
+        pdf = (
+            pd.concat(chunks)
+            .sort_values([ts_col, value_col], kind="mergesort")
+            .reset_index(drop=True)
+        )
+        ts_us = pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
+        ts_sec = ts_us / 1e6
+        if ts_sec[0] < last_ts:
+            raise ValueError(
+                f"series {series_id!r}: batch starts at ts {ts_sec[0]} before "
+                f"carried last ts {last_ts}; late data must go through the "
+                "batch OoO merge path"
+            )
+        carried, cols = step(carried, pdf, ts_us)
+        state.update((*carried, float(ts_sec[-1])))
+        yield pd.DataFrame({"series_id": series_id, "ts": pdf[ts_col], **cols})
+
+    src = points.select(
+        F.col(series_col).cast("string").alias(series_col), ts_col, value_col
+    )
+    return src.groupBy(series_col).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    )
+
+
 def streaming_ewma(
     points: DataFrame,
     alpha: float,
@@ -47,69 +98,19 @@ def streaming_ewma(
     if not (0.0 < alpha <= 1.0):
         raise ValueError("require 0 < alpha <= 1")
 
-    def fn(key, pdfs, state: GroupState):
-        series_id = key[0]
-        if state.exists:
-            last, n, last_ts = state.get
-        else:
-            last, n, last_ts = 0.0, 0, float("-inf")
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks)
-            .sort_values([ts_col, value_col], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        ts_sec = pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-        if n > 0 and ts_sec[0] < last_ts:
-            raise ValueError(
-                f"series {series_id!r}: batch starts at ts {ts_sec[0]} before "
-                f"carried last ts {last_ts}; late data must go through the "
-                "batch OoO merge path"
-            )
+    def step(carried, pdf, ts_us):
+        last, n = carried
         x = pdf[value_col].to_numpy(np.float64)
         # continue the recurrence from the carried value: seed the pandas
         # ewm with `last` (0.0 for a fresh series = the y_{-1}=0
         # convention), then drop the seed row
         z = pd.Series(np.concatenate([[last], x]))
         y = z.ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
-        state.update((float(y[-1]), int(n + len(x)), float(ts_sec[-1])))
-        yield pd.DataFrame(
-            {
-                "series_id": series_id,
-                "ts": pdf[ts_col],
-                "value": x,
-                "ewma": y,
-            }
-        )
+        return (float(y[-1]), int(n + len(x))), {"value": x, "ewma": y}
 
-    src = points.select(
-        F.col(series_col).cast("string").alias(series_col), ts_col, value_col
-    )
-    return src.groupBy(series_col).applyInPandasWithState(
-        fn, OUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def run_ewma_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    alpha: float,
-    checkpoint_dir: str,
-    query_name: str = "ewma_stream",
-):
-    """File-source stream -> per-row EWMA -> in-memory sink (append)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    out = streaming_ewma(stream, alpha)
-    return (
-        out.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    return _carry_per_series(
+        points, step, (0.0, 0), OUT_SCHEMA, STATE_SCHEMA,
+        series_col, ts_col, value_col,
     )
 
 
@@ -138,27 +139,8 @@ def streaming_counter_increase(
     lag.
     """
 
-    def fn(key, pdfs, state: GroupState):
-        series_id = key[0]
-        if state.exists:
-            last, has_last, last_ts = state.get
-        else:
-            last, has_last, last_ts = 0.0, False, float("-inf")
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks)
-            .sort_values([ts_col, value_col], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        ts_sec = pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-        if has_last and ts_sec[0] < last_ts:
-            raise ValueError(
-                f"series {series_id!r}: batch starts at ts {ts_sec[0]} before "
-                f"carried last ts {last_ts}; late data must go through the "
-                "batch OoO merge path"
-            )
+    def step(carried, pdf, ts_us):
+        last, has_last = carried
         x = pdf[value_col].to_numpy(np.float64)  # NaN where SQL NULL
         prev = np.concatenate([[last if has_last else np.nan], x[:-1]])
         delta = x - prev
@@ -167,41 +149,11 @@ def streaming_counter_increase(
         # operator yields NULL for the first sample and around NULL
         # values; a raw float64 column would emit NaN instead)
         inc_arr = pd.array(inc, dtype="Float64")
-        state.update((float(x[-1]), True, float(ts_sec[-1])))
-        yield pd.DataFrame(
-            {
-                "series_id": series_id,
-                "ts": pdf[ts_col],
-                "value": pdf[value_col],
-                "increase": inc_arr,
-            }
-        )
+        return (float(x[-1]), True), {"value": pdf[value_col], "increase": inc_arr}
 
-    src = points.select(
-        F.col(series_col).cast("string").alias(series_col), ts_col, value_col
-    )
-    return src.groupBy(series_col).applyInPandasWithState(
-        fn, COUNTER_OUT_SCHEMA, COUNTER_STATE_SCHEMA, "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_counter_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    checkpoint_dir: str,
-    query_name: str = "counter_stream",
-):
-    """File-source stream -> per-row counter increase -> memory sink."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    out = streaming_counter_increase(stream)
-    return (
-        out.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    return _carry_per_series(
+        points, step, (0.0, False), COUNTER_OUT_SCHEMA, COUNTER_STATE_SCHEMA,
+        series_col, ts_col, value_col,
     )
 
 
@@ -237,50 +189,22 @@ def streaming_holt(
     a21, a22 = -alpha * beta, 1.0 - alpha * beta
     ca, cb = alpha, alpha * beta
 
-    def fn(key, pdfs, state: GroupState):
-        series_id = key[0]
-        if state.exists:
-            l, b, n, last_ts = state.get
-        else:
-            l, b, n, last_ts = 0.0, 0.0, 0, float("-inf")
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks)
-            .sort_values([ts_col, value_col], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        ts_sec = pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-        if n > 0 and ts_sec[0] < last_ts:
-            raise ValueError(
-                f"series {series_id!r}: batch starts at ts {ts_sec[0]} before "
-                f"carried last ts {last_ts}; late data must go through the "
-                "batch OoO merge path"
-            )
+    def step(carried, pdf, ts_us):
+        l, b, n = carried
         x = pdf[value_col].to_numpy(np.float64)
         lv = np.empty(len(x))
         tv = np.empty(len(x))
         for i, xi in enumerate(x):
             l, b = a11 * l + a12 * b + ca * xi, a21 * l + a22 * b + cb * xi
             lv[i], tv[i] = l, b
-        state.update((float(l), float(b), int(n + len(x)), float(ts_sec[-1])))
-        yield pd.DataFrame(
-            {
-                "series_id": series_id,
-                "ts": pdf[ts_col],
-                "value": x,
-                "level": lv,
-                "trend": tv,
-            }
+        return (
+            (float(l), float(b), int(n + len(x))),
+            {"value": x, "level": lv, "trend": tv},
         )
 
-    src = points.select(
-        F.col(series_col).cast("string").alias(series_col), ts_col, value_col
-    )
-    return src.groupBy(series_col).applyInPandasWithState(
-        fn, HOLT_OUT_SCHEMA, HOLT_STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
+    return _carry_per_series(
+        points, step, (0.0, 0.0, 0), HOLT_OUT_SCHEMA, HOLT_STATE_SCHEMA,
+        series_col, ts_col, value_col,
     )
 
 
@@ -324,32 +248,10 @@ def streaming_holt_winters(
         raise ValueError("require 0 < alpha <= 1 and beta, gamma in [0, 1]")
     pw = period_seconds // n_phases
 
-    def fn(key, pdfs, state: GroupState):
-        series_id = key[0]
-        if state.exists:
-            l, b, s_list, n, last_ts = state.get
-            sv = np.asarray(s_list, dtype=np.float64)
-        else:
-            l, b, n, last_ts = 0.0, 0.0, 0, float("-inf")
-            sv = np.zeros(n_phases)
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks)
-            .sort_values([ts_col, value_col], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        es_us = pdf[ts_col].astype("datetime64[us]").astype("int64").to_numpy()
-        ts_sec = es_us / 1e6
-        if n > 0 and ts_sec[0] < last_ts:
-            raise ValueError(
-                f"series {series_id!r}: batch starts at ts {ts_sec[0]} before "
-                f"carried last ts {last_ts}; late data must go through the "
-                "batch OoO merge path"
-            )
-        ph = (es_us // 1_000_000) % period_seconds // pw
+    def step(carried, pdf, ts_us):
+        l, b, s_list, n = carried
+        sv = np.asarray(s_list, dtype=np.float64)
+        ph = (ts_us // 1_000_000) % period_seconds // pw
         x = pdf[value_col].to_numpy(np.float64)
         lv = np.empty(len(x))
         tv = np.empty(len(x))
@@ -361,24 +263,12 @@ def streaming_holt_winters(
             ns = gamma * (xi - l - b) + (1 - gamma) * s
             l, b, sv[j] = nl, nb, ns
             lv[i], tv[i], sov[i] = nl, nb, ns
-        state.update(
-            (float(l), float(b), [float(v) for v in sv],
-             int(n + len(x)), float(ts_sec[-1]))
-        )
-        yield pd.DataFrame(
-            {
-                "series_id": series_id,
-                "ts": pdf[ts_col],
-                "value": x,
-                "level": lv,
-                "trend": tv,
-                "seasonal": sov,
-            }
+        return (
+            (float(l), float(b), [float(v) for v in sv], int(n + len(x))),
+            {"value": x, "level": lv, "trend": tv, "seasonal": sov},
         )
 
-    src = points.select(
-        F.col(series_col).cast("string").alias(series_col), ts_col, value_col
-    )
-    return src.groupBy(series_col).applyInPandasWithState(
-        fn, HW_OUT_SCHEMA, HW_STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
+    return _carry_per_series(
+        points, step, (0.0, 0.0, [0.0] * n_phases, 0), HW_OUT_SCHEMA,
+        HW_STATE_SCHEMA, series_col, ts_col, value_col,
     )

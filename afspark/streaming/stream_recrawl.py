@@ -106,22 +106,3 @@ def streaming_recrawl_deltas(
     return src.groupBy("url").applyInPandasWithState(
         fn, OUT_SCHEMA, STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
     )
-
-
-def run_recrawl_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    checkpoint_dir: str,
-    query_name: str = "recrawl_stream",
-):
-    """File-source crawl stream -> per-crawl Hamming delta -> memory sink."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    out = streaming_recrawl_deltas(stream)
-    return (
-        out.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

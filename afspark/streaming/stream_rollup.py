@@ -48,25 +48,3 @@ def stream_rollup_1m(
         )
         .select("series_id", F.col("w.start").alias("bucket_ts"), "cnt", "sum", "min", "max", "avg")
     )
-
-
-def run_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    query_name: str = "rollup_1m_stream",
-    watermark: str = "10 minutes",
-):
-    """File-source stream -> 1m rollup -> in-memory sink (complete mode).
-
-    Used by tests and demos: drop parquet files into ``source_dir`` and
-    the memory table ``query_name`` accumulates the rolled-up tier.
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    rolled = stream_rollup_1m(stream, watermark=watermark)
-    return (
-        rolled.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

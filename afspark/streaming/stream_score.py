@@ -17,8 +17,8 @@ cited, not copied).
 
 Scale shape: state per series is bounded by winlen - 1 leftover samples
 (+ the in-flight batch) — ~8 KB at winlen=1024 — partitioned by series
-exactly like the batch kernel shuffle; hot series split upstream by the
-same salting machinery.  At 100 TB state belongs in the RocksDB provider
+exactly like the batch kernel shuffle; a hot series is a throughput
+concern only (its state does not grow).  At 100 TB state belongs in the RocksDB provider
 (``spark.sql.streaming.stateStore.providerClass``).  Samples must arrive
 in order per series (seq-contiguous); violations raise rather than emit
 silently wrong windows — arbitrarily late data belongs to the batch OoO
@@ -120,31 +120,4 @@ def streaming_score(
         STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_score_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    checkpoint_dir: str,
-    features,
-    winlen: int,
-    noverlap: int = 0,
-    fs: float = 1.0,
-    query_name: str = "score_stream",
-):
-    """File-source sample stream -> stateful windowed Score -> memory sink."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # one micro-batch per file, in order
-        .parquet(source_dir)
-    )
-    scored = streaming_score(stream, features, winlen, noverlap, fs)
-    return (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )

@@ -56,27 +56,3 @@ def stream_session_stats(
             "series_id", "session_start", "session_end", "duration_s", "n", "value_sum"
         )
     )
-
-
-def run_session_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    gap_seconds: int,
-    query_name: str = "session_stream",
-    watermark: str = "10 minutes",
-):
-    """File-source stream -> session aggregates -> in-memory sink.
-
-    Append mode: a session's row is emitted exactly once, after the
-    watermark passes its close — the correct production contract (update
-    mode would re-emit a growing session every micro-batch).
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    sessions = stream_session_stats(stream, gap_seconds, watermark=watermark)
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

@@ -52,30 +52,3 @@ def stream_sliding_distinct(
             F.col("n_distinct").cast("long").alias("n_distinct"),
         )
     )
-
-
-def run_sliding_distinct_stream_to_memory(
-    spark,
-    source_dir: str,
-    schema: str,
-    window_seconds: int,
-    hop_seconds: int,
-    query_name: str = "sliding_distinct_stream",
-    watermark: str = "0 seconds",
-):
-    """File-source stream -> sliding distinct -> memory sink (append).
-
-    Chained stateful aggregations require append mode; each window row
-    is emitted exactly once, after the watermark passes the window end
-    (advance it with a far-future flush row in tests).
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    out = stream_sliding_distinct(
-        stream, window_seconds, hop_seconds, watermark=watermark
-    )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

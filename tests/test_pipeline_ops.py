@@ -1,4 +1,4 @@
-"""Tests for dedup / similarity / text / multimodal / planner operators."""
+"""Tests for dedup / similarity / text / multimodal operators."""
 
 import numpy as np
 import pandas as pd
@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from afspark.operators import dedup, multimodal, similarity, text
-from afspark.plans.planner import choose_assembly, hot_keys, salt_series
 
 
 @pytest.fixture(scope="module")
@@ -274,35 +273,6 @@ def test_multimodal_plumbing(spark):
     }
     frames = multimodal.frame_sample(media, fake=True)
     assert frames.count() == 40  # duration 0 -> one frame each
-
-
-# --- planner ----------------------------------------------------------------------
-
-def test_choose_assembly():
-    assert choose_assembly(1000, 0, algebraic=True).strategy == "tumbling"
-    assert choose_assembly(1000, 500, algebraic=True).strategy == "sliding"
-    assert choose_assembly(1000, 900, algebraic=True).strategy == "halo"
-    assert choose_assembly(1000, 500, algebraic=False).strategy == "halo"
-    assert choose_assembly(1000, 900, algebraic=False).replication < 1.02
-
-
-def test_hot_keys_and_salting(spark):
-    from afspark.sources.pages import generate_pages, derive_samples
-
-    pages = generate_pages(spark, 400, hot_domain_frac=0.4)
-    samples = derive_samples(pages)
-    hot = hot_keys(samples, "series_id", frac_threshold=0.2)
-    assert hot == ["d000.example.com"]
-    salted = salt_series(samples, hot, n_salts=4, span=1000)
-    per_salt = (
-        salted.filter(F.col("series_id") == "d000.example.com")
-        .groupBy("salt")
-        .count()
-        .collect()
-    )
-    assert len(per_salt) > 1  # hot series split across salts
-    cold = salted.filter(F.col("series_id") != "d000.example.com")
-    assert cold.filter(F.col("salt") != 0).count() == 0
 
 
 def test_decode_media_real_path_gated_on_pil(spark):

@@ -147,21 +147,18 @@ def test_incremental_refresh_equals_full(spark, points):
     scattered across series and time (the worst case: late + out-of-order),
     not a clean tail.
     """
-    from afspark.operators.rollup import (
-        refresh_all_tiers_incremental,
-        refresh_tier_incremental,
-    )
+    from afspark.operators.rollup import refresh_tier_incremental
 
     tagged = points.withColumn("_h", F.pmod(F.xxhash64("series_id", "ts"), F.lit(7)))
     old = tagged.filter(F.col("_h") != 0).drop("_h")
-    new = tagged.filter(F.col("_h") == 0).drop("_h")
+    new = tagged.filter(F.col("_h") == 0).drop("_h").persist()
     assert new.count() > 0 and old.count() > 0
 
     committed = rollup_all_tiers(old)
-    refreshed = refresh_all_tiers_incremental(committed, new)
     full = rollup_all_tiers(points)
-    for name in TIERS:
-        a, b = _tier_map(refreshed[name]), _tier_map(full[name])
+    for name, sec in TIERS.items():
+        refreshed = refresh_tier_incremental(committed[name], new, sec)
+        a, b = _tier_map(refreshed), _tier_map(full[name])
         assert set(a) == set(b), name
         for k in a:
             assert a[k][0] == b[k][0], (name, k)          # cnt exact
@@ -169,18 +166,7 @@ def test_incremental_refresh_equals_full(spark, points):
             assert a[k][2] == b[k][2] and a[k][3] == b[k][3]  # min/max exact
             assert a[k][4] == pytest.approx(b[k][4], rel=1e-12)
             assert a[k][7] == b[k][7] and a[k][8] == b[k][8]  # first/last_ts exact
-
-    # delta-only mode returns exactly the touched buckets
-    sec = TIERS["1h"]
-    delta = refresh_tier_incremental(
-        committed["1h"], new, sec, include_untouched=False
-    )
-    touched = {
-        (r.series_id, r.bucket_ts)
-        for r in rollup_points(new, sec).select("series_id", "bucket_ts").collect()
-    }
-    got = {(r.series_id, r.bucket_ts) for r in delta.collect()}
-    assert got == touched
+    new.unpersist()
 
 
 def test_incremental_refresh_first_last_bit_exact(spark):

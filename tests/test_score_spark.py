@@ -7,7 +7,6 @@ Bit-for-bit is asserted with == on float64 (same numpy kernel code, same
 per-window inputs).
 """
 
-import math
 import numpy as np
 import pandas as pd
 import pytest
@@ -120,8 +119,14 @@ def test_score_wide_pivot(spark, signals):
     assert len(rows) == num_windows(30_000, 3000, 0)
 
 
+def assert_no_python_node(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InPandas" not in plan and "ArrowEvalPython" not in plan, plan
+
+
 def test_catalyst_twins_match_kernels(spark, signals):
-    """Pure-JVM tumbling/sliding aggregates == numpy kernels (tolerance)."""
+    """Pure-JVM tumbling/sliding aggregates == numpy kernels (tolerance),
+    with no Python worker hop in the executed plan."""
     df = make_samples(spark, signals)
     winlen, noverlap = 1000, 0
     agg = tumbling_agg(
@@ -133,6 +138,7 @@ def test_catalyst_twins_match_kernels(spark, signals):
             "myriad": myriad_agg(df.value, 2.5),
         },
     )
+    assert_no_python_node(agg)
     got = {(r.series_id, r.win_start): r for r in agg.collect()}
     for sid, x in signals.items():
         starts, _, ve = K.score_local(K.Energy(), x, winlen=winlen)
@@ -149,6 +155,7 @@ def test_sliding_agg_overlap_matches_kernels(spark, signals):
     df = make_samples(spark, signals)
     winlen, noverlap = 960, 480
     agg = sliding_agg(df, winlen, noverlap, {"energy": energy_agg(df.value)})
+    assert_no_python_node(agg)
     got = {(r.series_id, r.win_start): r.energy for r in agg.collect()}
     for sid, x in signals.items():
         starts, _, ve = K.score_local(K.Energy(), x, winlen=winlen, noverlap=noverlap)
@@ -158,14 +165,20 @@ def test_sliding_agg_overlap_matches_kernels(spark, signals):
 
 
 def test_zcr_windowed_matches_kernel(spark, signals):
+    """Lag-based ZCR twin == kernel exactly (ZCR is a count ratio), with
+    no Python node, tumbling and overlapping."""
     df = make_samples(spark, signals)
-    winlen, noverlap = 960, 480
-    agg = zcr_windowed(df, winlen, noverlap)
-    got = {(r.series_id, r.win_start): r.zcr for r in agg.collect()}
-    for sid, x in signals.items():
-        starts, _, v = K.score_local(K.ZeroCrossingRate(), x, winlen=winlen, noverlap=noverlap)
-        for i, s in enumerate(starts):
-            assert got[(sid, int(s))] == pytest.approx(v[i, 0], rel=1e-12)
+    for winlen, noverlap in [(960, 480), (1000, 0), (1000, 500)]:
+        agg = zcr_windowed(df, winlen, noverlap)
+        assert_no_python_node(agg)
+        got = {(r.series_id, r.win_start): r.zcr for r in agg.collect()}
+        for sid, x in signals.items():
+            starts, _, v = K.score_local(
+                K.ZeroCrossingRate(), x, winlen=winlen, noverlap=noverlap
+            )
+            assert len([k for k in got if k[0] == sid]) == len(starts)
+            for i, s in enumerate(starts):
+                assert got[(sid, int(s))] == v[i, 0], (sid, winlen, noverlap, s)
 
 
 def test_score_pages_equals_samples_path(spark):
@@ -209,80 +222,3 @@ def test_preprocess_hook_bit_exact(spark, signals):
     # and preprocess actually changes the result
     base = collect_scores(score(df, feats, 960, 480, fs=FS))
     assert got != base
-
-
-def test_score_auto_dispatch(spark, signals):
-    """Planner dispatch: Catalyst path for algebraic features, kernel
-    path otherwise; values agree to round-off; no Python node in the
-    Catalyst plan."""
-    from afspark.operators.score import score_auto
-
-    df = make_samples(spark, signals)
-    feats = [K.Energy(), K.SoundPressureLevel()]
-    auto = score_auto(df, feats, 1000, 0, fs=FS)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in plan and "ArrowEvalPython" not in plan
-    got = {(r.series_id, r.win_start, r.feature): r.value for r in auto.collect()}
-    want = {
-        (sid, s, name): v
-        for sid, s, name, v in local_expected(signals, feats, 1000, 0)
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12)
-    # non-algebraic feature -> falls back to the kernel path (bit-exact)
-    auto2 = score_auto(df, [K.PermutationEntropy(3)], 1000, 0, fs=FS)
-    plan2 = auto2._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" in plan2
-    assert collect_scores(auto2) == local_expected(signals, [K.PermutationEntropy(3)], 1000, 0)
-
-
-def test_score_auto_zcr_catalyst_twin(spark, signals):
-    """ZCR dispatches to its lag-based Catalyst twin (no Python node) and
-    matches the kernel path exactly; mixes with other algebraic features."""
-    from afspark.operators.score import score_auto
-
-    df = make_samples(spark, signals)
-    for winlen, noverlap in [(1000, 0), (1000, 500)]:
-        auto = score_auto(df, [K.ZeroCrossingRate()], winlen, noverlap, fs=FS)
-        plan = auto._jdf.queryExecution().executedPlan().toString()
-        assert "InPandas" not in plan and "ArrowEvalPython" not in plan
-        got = collect_scores(auto)
-        want = local_expected(signals, [K.ZeroCrossingRate()], winlen, noverlap)
-        assert got == want  # zcr is a count ratio -> exact, not approx
-    # mixed: energy + zcr unions the two Catalyst paths, still no Python
-    mixed = score_auto(df, [K.Energy(), K.ZeroCrossingRate()], 1000, 0, fs=FS)
-    planm = mixed._jdf.queryExecution().executedPlan().toString()
-    assert "InPandas" not in planm and "ArrowEvalPython" not in planm
-    gotm = {(r.series_id, r.win_start, r.feature): r.value for r in mixed.collect()}
-    wantm = {
-        (sid, s, name): v
-        for sid, s, name, v in local_expected(
-            signals, [K.Energy(), K.ZeroCrossingRate()], 1000, 0
-        )
-    }
-    assert set(gotm) == set(wantm)
-    for k in wantm:
-        assert gotm[k] == pytest.approx(wantm[k], rel=1e-12)
-
-
-def test_score_auto_duplicate_feature_keys(spark, signals):
-    """Two features sharing a key (different params) must NOT collapse:
-    falls back to the kernel path and emits both (ADVICE r1)."""
-    from afspark.operators.score import score_auto
-
-    feats = [K.SoundPressureLevel(ref=1.0), K.SoundPressureLevel(ref=20e-6)]
-    df = make_samples(spark, {"sine": signals["sine"]})
-    out = score_auto(df, feats, 1000, 0, fs=FS)
-    rows = out.collect()
-    starts = {r.win_start for r in rows}
-    # two values per (series, win_start): ref=1 and ref=20e-6 differ by
-    # a constant 20*log10(1/20e-6) offset
-    by_start = {}
-    for r in rows:
-        by_start.setdefault(r.win_start, []).append(r.value)
-    assert all(len(v) == 2 for v in by_start.values())
-    offset = 20.0 * math.log10(1.0 / 20e-6)
-    for s in starts:
-        lo, hi = sorted(by_start[s])
-        assert hi - lo == pytest.approx(offset, rel=1e-9)

@@ -7,9 +7,29 @@ import pytest
 from pyspark.sql import functions as F
 
 from afspark.operators.rollup import rollup_points
-from afspark.streaming.stream_rollup import run_stream_to_memory
+from afspark.streaming.stream_rollup import stream_rollup_1m
 
 SCHEMA = "series_id string, ts timestamp, value double"
+
+
+def run_to_memory(
+    spark, src, schema, op, name, mode="append", checkpoint=None,
+    one_file_per_batch=False,
+):
+    """Parquet file-source stream over ``src`` -> ``op`` -> memory table
+    ``name``; returns the started query."""
+    reader = spark.readStream.schema(schema)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", 1)  # in file order
+    writer = (
+        op(reader.parquet(src))
+        .writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
 
 
 @pytest.fixture()
@@ -29,8 +49,9 @@ def test_stream_rollup_matches_batch(spark, sf_dir, tmpdir):
     a = pts.filter(F.col("event_id") % 2 == 0)
     b = pts.filter(F.col("event_id") % 2 == 1)
     a.write.mode("overwrite").parquet(src)
-    q = run_stream_to_memory(
-        spark, src, SCHEMA, query_name="t_rollup_stream", watermark="365 days"
+    q = run_to_memory(
+        spark, src, SCHEMA, lambda s: stream_rollup_1m(s, watermark="365 days"),
+        "t_rollup_stream", mode="complete",
     )
     try:
         q.processAllAvailable()
@@ -57,7 +78,7 @@ def test_streaming_stateful_dedup_across_batches(spark, tmpdir):
     """applyInPandasWithState exact-dedup: one representative per distinct
     text across micro-batches; re-deliveries and later duplicates emit
     nothing (state survives between batches via the checkpoint)."""
-    from afspark.streaming.stream_dedup import run_dedup_stream_to_memory
+    from afspark.streaming.stream_dedup import streaming_exact_dedup
 
     schema = "doc_id long, text string"
     src = f"{tmpdir}/in"
@@ -66,8 +87,9 @@ def test_streaming_stateful_dedup_across_batches(spark, tmpdir):
         [(10, "alpha"), (11, "beta"), (12, "alpha")], schema
     )
     b1.coalesce(1).write.mode("overwrite").parquet(src)
-    q = run_dedup_stream_to_memory(
-        spark, src, schema, ckpt, query_name="t_dedup_stream"
+    q = run_to_memory(
+        spark, src, schema, streaming_exact_dedup, "t_dedup_stream",
+        checkpoint=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -422,7 +444,7 @@ def test_streaming_score_bit_exact_vs_batch(spark, tmpdir):
     import pandas as pd
 
     from afspark.functions import kernels as K
-    from afspark.streaming.stream_score import run_score_stream_to_memory
+    from afspark.streaming.stream_score import streaming_score
 
     rng = np.random.default_rng(5)
     series = {"a": rng.normal(size=3000), "b": rng.normal(size=2500)}
@@ -433,10 +455,10 @@ def test_streaming_score_bit_exact_vs_batch(spark, tmpdir):
     # 3 sequential files; cuts NOT aligned to window boundaries
     _write_sample_files(src, series, [0, 1000, 1900, None])
 
-    q = run_score_stream_to_memory(
+    q = run_to_memory(
         spark, src, "series_id string, seq long, value double",
-        f"{tmpdir}/ckpt", feats, winlen, noverlap, fs,
-        query_name="score_stream_t",
+        lambda s: streaming_score(s, feats, winlen, noverlap, fs),
+        "score_stream_t", checkpoint=f"{tmpdir}/ckpt", one_file_per_batch=True,
     )
     try:
         q.processAllAvailable()
@@ -552,7 +574,7 @@ def test_stream_sessions_match_batch(spark, tmpdir):
     import datetime as dtm
 
     from afspark.operators.sessions import session_stats
-    from afspark.streaming.stream_sessions import run_session_stream_to_memory
+    from afspark.streaming.stream_sessions import stream_session_stats
 
     t0 = dtm.datetime(2024, 1, 1)
     gap = 60
@@ -569,9 +591,10 @@ def test_stream_sessions_match_batch(spark, tmpdir):
     src = f"{tmpdir}/in"
     pts.coalesce(1).write.mode("overwrite").parquet(src)
 
-    q = run_session_stream_to_memory(
-        spark, src, SCHEMA, gap_seconds=gap, query_name="t_sess_stream",
-        watermark="0 seconds",
+    q = run_to_memory(
+        spark, src, SCHEMA,
+        lambda s: stream_session_stats(s, gap, watermark="0 seconds"),
+        "t_sess_stream",
     )
     try:
         q.processAllAvailable()
@@ -613,7 +636,7 @@ def test_stream_ewma_matches_batch_and_sequential(spark, tmpdir):
     import numpy as np
 
     from afspark.operators.tsanalytics import ewma
-    from afspark.streaming.stream_ewma import run_ewma_stream_to_memory
+    from afspark.streaming.stream_ewma import streaming_ewma
 
     alpha = 0.11
     t0 = dtm.datetime(2024, 1, 1)
@@ -629,8 +652,9 @@ def test_stream_ewma_matches_batch_and_sequential(spark, tmpdir):
     src, ckpt = f"{tmpdir}/in", f"{tmpdir}/ckpt"
     pts.filter(F.col("ts") < cut).coalesce(1).write.mode("overwrite").parquet(src)
 
-    q = run_ewma_stream_to_memory(
-        spark, src, SCHEMA, alpha, ckpt, query_name="t_ewma_stream"
+    q = run_to_memory(
+        spark, src, SCHEMA, lambda s: streaming_ewma(s, alpha), "t_ewma_stream",
+        checkpoint=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -640,6 +664,12 @@ def test_stream_ewma_matches_batch_and_sequential(spark, tmpdir):
             (r.series_id, r.ts): r.ewma
             for r in spark.sql("select * from t_ewma_stream").collect()
         }
+        # a point before the carried last ts fails the query instead of
+        # continuing the recurrence out of order
+        late = spark.createDataFrame([("a", t0, 0.0)], SCHEMA)
+        late.coalesce(1).write.mode("append").parquet(src)
+        with pytest.raises(Exception, match="batch OoO merge path"):
+            q.processAllAvailable()
     finally:
         q.stop()
     assert len(got) == len(rows)
@@ -672,7 +702,7 @@ def test_stream_counter_increase_matches_batch(spark, tmpdir):
     import datetime as dtm
 
     from afspark.operators.tsanalytics import counter_increase
-    from afspark.streaming.stream_ewma import run_counter_stream_to_memory
+    from afspark.streaming.stream_ewma import streaming_counter_increase
 
     t0 = dtm.datetime(2024, 1, 1)
     rows = [
@@ -686,8 +716,9 @@ def test_stream_counter_increase_matches_batch(spark, tmpdir):
     cut = t0 + dtm.timedelta(seconds=40)
     src, ckpt = f"{tmpdir}/in", f"{tmpdir}/ckpt"
     pts.filter(F.col("ts") < cut).coalesce(1).write.mode("overwrite").parquet(src)
-    q = run_counter_stream_to_memory(
-        spark, src, SCHEMA, ckpt, query_name="t_counter_stream"
+    q = run_to_memory(
+        spark, src, SCHEMA, streaming_counter_increase, "t_counter_stream",
+        checkpoint=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -729,14 +760,9 @@ def test_stream_holt_matches_batch(spark, tmpdir):
     cut = t0 + dtm.timedelta(seconds=40 * 7)
     src, ckpt = f"{tmpdir}/holt_in", f"{tmpdir}/holt_ckpt"
     pts.filter(F.col("ts") < cut).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        streaming_holt(stream, 0.3, 0.1)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("memory")
-        .queryName("t_holt_stream")
-        .start()
+    q = run_to_memory(
+        spark, src, SCHEMA, lambda s: streaming_holt(s, 0.3, 0.1), "t_holt_stream",
+        checkpoint=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -776,15 +802,10 @@ def test_stream_m4_matches_batch_across_cuts(spark, sf_dir, tmpdir):
     pts.filter(F.col("event_id") % 2 == 0).drop("event_id").write.mode(
         "overwrite"
     ).parquet(src)
-    stream = spark.readStream.schema(
-        "series_id string, seq long, ts timestamp, value double"
-    ).parquet(src)
-    q = (
-        stream_m4(stream, 3600, watermark="365 days")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("t_m4_stream")
-        .start()
+    q = run_to_memory(
+        spark, src, "series_id string, seq long, ts timestamp, value double",
+        lambda s: stream_m4(s, 3600, watermark="365 days"), "t_m4_stream",
+        mode="complete",
     )
     try:
         q.processAllAvailable()
@@ -826,14 +847,10 @@ def test_stream_holt_winters_matches_batch(spark, tmpdir):
     cut = t0 + dtm.timedelta(seconds=60 * 97)
     src, ckpt = f"{tmpdir}/hw_in", f"{tmpdir}/hw_ckpt"
     pts.filter(F.col("ts") < cut).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
-    q = (
-        streaming_holt_winters(stream, 0.3, 0.1, 0.2, 3600, 6)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("memory")
-        .queryName("t_hw_stream")
-        .start()
+    q = run_to_memory(
+        spark, src, SCHEMA,
+        lambda s: streaming_holt_winters(s, 0.3, 0.1, 0.2, 3600, 6),
+        "t_hw_stream", checkpoint=ckpt,
     )
     try:
         q.processAllAvailable()
@@ -870,9 +887,7 @@ def test_stream_sliding_distinct_matches_batch(spark, tmpdir):
     import datetime as dtm
 
     from afspark.operators.distinct import sliding_distinct
-    from afspark.streaming.stream_sliding import (
-        run_sliding_distinct_stream_to_memory,
-    )
+    from afspark.streaming.stream_sliding import stream_sliding_distinct
 
     t0 = dtm.datetime(2024, 1, 1)
     rows = []
@@ -892,8 +907,10 @@ def test_stream_sliding_distinct_matches_batch(spark, tmpdir):
         "overwrite"
     ).parquet(src)
 
-    q = run_sliding_distinct_stream_to_memory(
-        spark, src, schema, 21600, 3600, query_name="t_sd_stream"
+    q = run_to_memory(
+        spark, src, schema,
+        lambda s: stream_sliding_distinct(s, 21600, 3600, watermark="0 seconds"),
+        "t_sd_stream",
     )
     try:
         q.processAllAvailable()
@@ -930,7 +947,7 @@ def test_stream_recrawl_deltas_match_batch(spark, tmpdir):
     import numpy as np
 
     from afspark.operators.recrawl import recrawl_deltas
-    from afspark.streaming.stream_recrawl import run_recrawl_stream_to_memory
+    from afspark.streaming.stream_recrawl import streaming_recrawl_deltas
 
     t0 = dtm.datetime(2024, 1, 1)
     rng = np.random.default_rng(5)
@@ -949,8 +966,9 @@ def test_stream_recrawl_deltas_match_batch(spark, tmpdir):
         "overwrite"
     ).parquet(src)
 
-    q = run_recrawl_stream_to_memory(
-        spark, src, schema, ckpt, query_name="t_recrawl_stream"
+    q = run_to_memory(
+        spark, src, schema, streaming_recrawl_deltas, "t_recrawl_stream",
+        checkpoint=ckpt,
     )
     try:
         q.processAllAvailable()
