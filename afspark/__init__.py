@@ -10,11 +10,14 @@ Layout
 ------
 functions/   pure numpy kernels (reference semantics, no Spark), codecs
 operators/   DataFrame operators: windows, score, rollup (incl. incremental
-             refresh + percentile tiers), gapfill, ooo, tsanalytics
-             (counter rate, z-score anomalies), asof, sessions, rangejoin,
-             lttb, dedup, similarity, text, multimodal
-sources/     deterministic pages/samples generators, chunk store
-streaming/   checkpoint/lineage + resume
+             refresh + percentile tiers), gapfill, tsanalytics (counter
+             rate, z-score anomalies), asof, sessions, rangejoin, lttb,
+             dedup, similarity, text, multimodal
+sources/     deterministic pages/samples generators, chunk codec, manifest
+             snapshots, z-order clustering
+streaming/   checkpoint/lineage + resume, the date-partitioned tier store
+             (bucket_date=: late-data merge, retention, compaction),
+             Structured Streaming twins
 """
 
 __version__ = "0.1.0"

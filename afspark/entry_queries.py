@@ -5805,7 +5805,8 @@ SQL_OFFSET_COMPARE_1D = """
 
 def q_lateness_profile_1h(spark, sf_dir):
     """Per-hour ingestion-lateness profile — the signal that tunes
-    ``withWatermark`` and the OoO repair window (ooo.py): p99 lateness
+    ``withWatermark`` and how far back late batches reach into the tier
+    store (stream_tier.apply_batch_once): p99 lateness
     from the HDR sketch (hdrsketch.py reused at scale=1, per-bucket
     keys), plus exact max and count-beyond-600s counters.  Ingest delay
     is synthesized deterministically (event_id * 2654435761 mod 7200

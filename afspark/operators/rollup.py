@@ -528,9 +528,7 @@ def refresh_tier_incremental(
     is tiny relative to the committed tier, so both the locating semi-join
     and the anti-join are broadcast — the committed table is scanned once,
     column-pruned, with NO shuffle of committed rows except the touched
-    subset (bounded by the batch's bucket span).  On a date-partitioned
-    tier store, compose with ``ooo.pruned_store_scan`` so the committed
-    scan is also partition-pruned to the batch's dates.
+    subset (bounded by the batch's bucket span).
 
     This is the in-memory merge (a committed tier DataFrame in, the
     refreshed tier out).  Writers of the date-partitioned tier store use
@@ -570,9 +568,9 @@ def realtime_cagg(
 
     Scale shape — this is a pure union, NO join and NO shuffle of
     committed rows: the committed side is a bucket-range filter
-    (partition-prunable on a date-partitioned tier store, compose with
-    ``ooo.pruned_store_scan``), and the raw side is a plain
-    ``ts >= watermark`` predicate that pushes down to the scan, so only
+    (partition-prunable on a date-partitioned tier store), and the raw
+    side is a plain ``ts >= watermark`` predicate that pushes down to the
+    scan, so only
     the recent files are read and the on-the-fly aggregation is bounded
     by the refresh lag, not by history.  Late points BELOW the watermark
     are intentionally invisible here (exactly TimescaleDB's contract):
@@ -622,14 +620,16 @@ def stitched_range_read(
     coarsest-tier bucket).
 
     Scale shape: per tier one bucket-range filter + union — no join, no
-    shuffle; on a date-partitioned tier store the filters are partition
-    prunes (compose with ``read_tier_range``), and each coarser tier
-    contributes ~60x fewer rows, so the result size is dominated by the
-    fine tail regardless of how far back t0 reaches.
+    shuffle; on a ``read_tier_store`` frame each filter also prunes the
+    ``bucket_date`` partitions (``stream_tier.clip_buckets``), and each
+    coarser tier contributes ~60x fewer rows, so the result size is
+    dominated by the fine tail regardless of how far back t0 reaches.
 
     Output: the tier rows (keys + bucket_ts + stats) plus ``tier`` and
     ``resolution_s`` columns recording which tier served each row.
     """
+    from ..streaming.stream_tier import clip_buckets
+
     spans = stitch_spans(
         sorted(tiers, key=lambda n: tier_seconds[n]),
         tier_seconds,
@@ -641,11 +641,7 @@ def stitched_range_read(
     parts: list[DataFrame] = []
     for name, flo, hi in spans:
         parts.append(
-            tiers[name]
-            .filter(
-                (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(flo)))
-                & (F.col("bucket_ts") < F.timestamp_seconds(F.lit(hi)))
-            )
+            clip_buckets(tiers[name], flo, hi)
             .withColumn("tier", F.lit(name))
             .withColumn(
                 "resolution_s", F.lit(tier_seconds[name]).cast("long")
@@ -747,11 +743,12 @@ def serve_range(
     the range is.  Filter the tier to the panel's series upstream, as a
     dashboard does; the per-series bound is the contract.
 
-    Scale shape: one bucket-range filter on the chosen tier (partition-
-    prunable) + M4's single algebraic aggregation; response size is
-    bounded by max_points, not by the range.  Returns
-    (tier_name, pixel_seconds, df).
+    Scale shape: one bucket-range filter on the chosen tier (it prunes
+    ``bucket_date`` partitions on a ``read_tier_store`` frame) + M4's
+    single algebraic aggregation; response size is bounded by
+    max_points, not by the range.  Returns (tier_name, pixel_seconds, df).
     """
+    from ..streaming.stream_tier import clip_buckets
     from .lttb import m4_downsample
 
     span = max(0, int(t1_epoch) - int(t0_epoch))
@@ -759,11 +756,7 @@ def serve_range(
     sec = tier_seconds[name]
     px_raw = -(-span // max(1, max_points))  # ceil seconds per pixel
     px = max(sec, -(-px_raw // sec) * sec)  # align up to the tier grid
-    clipped = tiers[name].filter(
-        (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(int(t0_epoch))))
-        & (F.col("bucket_ts") < F.timestamp_seconds(F.lit(int(t1_epoch))))
-    )
-    pts = clipped.select(
+    pts = clip_buckets(tiers[name], t0_epoch, t1_epoch).select(
         "series_id",
         F.col("bucket_ts").alias("ts"),
         F.col("avg").alias("value"),
@@ -786,11 +779,12 @@ def read_tier_range(
 
     ``store_paths`` maps tier name -> date-partitioned tier store
     (stream_tier layout: ``bucket_date=``).  The chosen tier's store is
-    scanned with a bucket_date predicate derived from the range, so only
-    the covered date directories are listed — the read cost tracks the
-    RANGE, not the store.  Returns (tier_name, DataFrame).
+    scanned with a bucket_date predicate derived from the range
+    (``stream_tier.clip_buckets``), so only the covered date directories
+    are listed — the read cost tracks the RANGE, not the store.  Returns
+    (tier_name, DataFrame).
     """
-    import datetime as _dt
+    from ..streaming.stream_tier import clip_buckets, read_tier_store
 
     # route among the tiers a store actually exists for: the coarsest
     # AVAILABLE tier meeting target_points (falling back to the finest
@@ -800,23 +794,8 @@ def read_tier_range(
     if not available:
         raise ValueError(f"no known tier among stores: {list(store_paths)}")
     name = choose_tier(start_epoch, end_epoch, target_points, available)
-    # the store's bucket_date comes from F.to_date in the engine's UTC
-    # session (session.py pins spark.sql.session.timeZone=UTC); derive the
-    # pruning dates in UTC to match
-    utc = _dt.timezone.utc
-    d0 = _dt.datetime.fromtimestamp(start_epoch, tz=utc).date().isoformat()
-    d1 = _dt.datetime.fromtimestamp(end_epoch, tz=utc).date().isoformat()
-    from ..streaming.stream_tier import read_tier_store
-
-    df = (
-        read_tier_store(spark, store_paths[name])
-        .filter((F.col("bucket_date") >= d0) & (F.col("bucket_date") <= d1))
-        .filter(
-            (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(start_epoch)))
-            & (F.col("bucket_ts") < F.timestamp_seconds(F.lit(end_epoch)))
-        )
-    )
-    return name, df
+    df = read_tier_store(spark, store_paths[name])
+    return name, clip_buckets(df, start_epoch, end_epoch)
 
 
 def score_pages_to_tiers(

@@ -1,6 +1,6 @@
 """Z-order (Morton) clustering for multi-dimensional file skipping.
 
-Partition pruning (chunkstore's ``(chunk_date, bucket)`` layout,
+Partition pruning (the tier store's ``bucket_date`` layout,
 manifest.py's partition-pinned manifests) answers ONE-dimensional
 predicates at the directory level.  The next thing a lakehouse
 deployment reaches for — Iceberg's ``rewrite_data_files(strategy =>
@@ -109,7 +109,7 @@ def cluster_zorder(
     with tight footer min/max on both ``a_col`` and ``b_col``.
 
     This is the compaction-pass primitive: run it per storage partition
-    (e.g. per chunk_date) — the shuffle is sized by that partition alone.
+    (e.g. per bucket_date) — the shuffle is sized by that partition alone.
     """
     z = zvalue(F.col(a_col), F.col(b_col), bits).alias(z_col)
     out = df.select("*", z)

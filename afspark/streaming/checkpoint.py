@@ -8,9 +8,9 @@ a completed partition.
 On plain parquet the checkpoint table is an append-only log directory
 (one small parquet file per completion — the commit unit); with Iceberg
 the same rows would carry the snapshot id of the data commit.  The data
-itself is written partition-at-a-time (dir-per-partition), so a data
-write and its log row form an idempotent pair: a crash between them just
-re-runs that one partition.
+itself is written unit-at-a-time (a directory per unit, or the hive
+partitions a unit owns), so a data write and its log row form an
+idempotent pair: a crash between them just re-runs that one unit.
 """
 
 from __future__ import annotations
@@ -89,11 +89,18 @@ def run_resumable(
     """Process partitions idempotently; skip ones already in the log.
 
     ``process_fn(partition_key) -> DataFrame`` produces that partition's
-    output, written to ``{out_path}/part_key={key}`` (hive-partitioned
-    further by ``partition_by`` columns when given, so downstream readers
-    can partition-prune inside a unit).  Returns run stats
+    output.  Without ``partition_by`` it is written to
+    ``{out_path}/part_key={key}``.  With ``partition_by`` it is written
+    into ``out_path`` itself, hive-partitioned by those columns, by
+    DYNAMIC overwrite: the unit replaces exactly the partitions its rows
+    fall in, so units that own disjoint partition values share one store
+    and a re-run unit rewrites only its own partitions.  The row count
+    comes from an Observation on the write (no readback job; an empty
+    unit commits 0 rows).  Returns run stats
     {"processed": [...], "skipped": [...]}.
     """
+    from pyspark.sql import Observation
+
     done = log.completed(stage)
     processed, skipped = [], []
     run_id = str(uuid.uuid4())
@@ -102,18 +109,18 @@ def run_resumable(
             skipped.append(key)
             continue
         t0 = time.time()
-        df = process_fn(key)
-        target = f"{out_path}/part_key={key}"
-        writer = df.write.mode("overwrite")
+        obs = Observation()
+        writer = process_fn(key).observe(obs, F.count(F.lit(1)).alias("rows")).write
         if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-        # Readback with the writer's schema supplied explicitly: a
-        # dynamic-partition write of an EMPTY unit emits only _SUCCESS
-        # (no data files), and schema inference on that directory raises
-        # — the unit could then never be marked complete and every retry
-        # re-crashed on the same readback.
-        n = spark.read.schema(df.schema).parquet(target).count()
+            (
+                writer.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*partition_by)
+                .parquet(out_path)
+            )
+        else:
+            writer.mode("overwrite").parquet(f"{out_path}/part_key={key}")
+        n = obs.get["rows"]
         fp = fingerprint_fn(key) if fingerprint_fn else ""
         log.record(stage, key, n, int((time.time() - t0) * 1000), fp, run_id)
         processed.append(key)

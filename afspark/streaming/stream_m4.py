@@ -1,8 +1,8 @@
 """Streaming M4 downsample: the batch witness aggregation, restated so
 Structured Streaming can run it.
 
-min_by/max_by are not supported inside streaming aggregations (see
-stream_rollup's first/last caveat), but M4's four witnesses are all
+min_by/max_by are not supported inside streaming aggregations, but
+M4's four witnesses are all
 expressible as STRUCT-ORDERED min/max — plain declarative aggregates the
 streaming state store merges incrementally:
 
@@ -13,8 +13,9 @@ Struct comparison is lexicographic, so the witness AND its tie-break
 (seq for first/last; (value, seq) for min/max) ride in one value — the
 exact tie rules of the batch operator (operators/lttb.m4_downsample),
 which the parity test certifies boundary-exactly across micro-batch
-cuts.  Late rows beyond the watermark fall to the batch OoO merge path,
-as with every streaming tier here.
+cuts.  Late rows beyond the watermark are dropped by the stream; late
+data that must land goes through the tier store's merge
+(stream_tier.apply_batch_once).
 """
 
 from __future__ import annotations

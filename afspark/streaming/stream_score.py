@@ -21,8 +21,8 @@ exactly like the batch kernel shuffle; a hot series is a throughput
 concern only (its state does not grow).  At 100 TB state belongs in the RocksDB provider
 (``spark.sql.streaming.stateStore.providerClass``).  Samples must arrive
 in order per series (seq-contiguous); violations raise rather than emit
-silently wrong windows — arbitrarily late data belongs to the batch OoO
-path, mirroring stream_rollup's Lambda split.
+silently wrong windows — arbitrarily late points belong to the tier
+store's merge (stream_tier.apply_batch_once).
 """
 
 from __future__ import annotations

@@ -1,15 +1,21 @@
-"""Streaming-maintained tier store: foreachBatch + incremental refresh.
+"""The date-partitioned tier store: layout, late-data merge, retention and
+compaction.
 
-stream_rollup_1m (stream_rollup.py) is the pure watermarked-aggregation
-twin, but it cannot carry order-dependent aggregates (first/last) and its
-complete-mode state grows with the tier.  This module is the production
-shape instead: each micro-batch runs BATCH code (foreachBatch), merging
-the batch into a persistent, date-partitioned tier store with
-refresh_tier_store — one shuffle that re-aggregates the batch's points
-together with the committed rows of every date the batch touches.  Full
-tier schema including first/last, bounded state (the store is on disk,
-not in the stream), and arbitrarily late data handled by the same
-associative algebra as refresh_tier_incremental and the batch OoO path.
+One layout for every tier: ``{store}/bucket_date=D/`` parquet holding the
+``TIER_SCHEMA`` columns, ``D = to_date(bucket_ts)`` in the engine's UTC
+session.  ``jobs/rollup_job.py`` writes it (one resumable unit per 1m
+date), ``apply_batch_once`` merges late and out-of-order points into it,
+``jobs/maintenance_job.py`` retains (``apply_retention``) and compacts
+(``compact_tier_store``) it, and the range readers prune it through
+``clip_buckets``.
+
+Late data: each micro-batch runs BATCH code (foreachBatch), merging the
+batch into the store with refresh_tier_store — one shuffle that
+re-aggregates the batch's points together with the committed rows of
+every date the batch touches.  Full tier schema including first/last,
+bounded state (the store is on disk, not in the stream), and arbitrarily
+late data handled by the same associative algebra as
+refresh_tier_incremental.
 
 Delivery semantics: foreachBatch may redeliver a batch after a failure;
 the merge is NOT idempotent (counts would double), so batch ids are
@@ -19,8 +25,10 @@ Committed redeliveries are skipped.  A redelivery that finds a dangling
 `intent` (crash inside the merge-commit window) raises instead of
 guessing — without transactional storage (Iceberg MERGE) it cannot be
 known whether the partial merge landed, and a detectable stall beats
-silent double-counting; remediation is to rebuild the touched dates via
-the batch/OoO path and clear the entry.  Batch ids are only meaningful
+silent double-counting.  Remediation: ``rollup.audit_tier_consistency``
+against the next coarser tier finds the dates; recompute them from the
+raw points with ``rollup_points``, overwrite those ``bucket_date``
+partitions, and clear the entry.  Batch ids are only meaningful
 within one streaming-checkpoint lineage, so the journal is bound to the
 checkpoint location and refuses a mismatched one (a checkpoint-less
 restart would replay ids from 0 and silently drop new data).
@@ -47,6 +55,104 @@ def read_tier_store(spark: SparkSession, path: str) -> DataFrame:
     if not any(p.glob("bucket_date=*")):
         return spark.createDataFrame([], TIER_SCHEMA + ", bucket_date date")
     return spark.read.schema(TIER_SCHEMA + ", bucket_date date").parquet(path)
+
+
+def clip_buckets(df: DataFrame, t0_epoch: int, t1_epoch: int) -> DataFrame:
+    """Tier rows with ``bucket_ts`` in [t0, t1).  On a frame with a
+    ``bucket_date`` column (``read_tier_store``) the same bounds also give
+    a partition predicate, so the scan lists only the covered dates.
+
+    The dates are UTC, as ``F.to_date`` gives them in the engine's session
+    (session.py pins spark.sql.session.timeZone=UTC)."""
+    import datetime as _dt
+
+    out = df.filter(
+        (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(int(t0_epoch))))
+        & (F.col("bucket_ts") < F.timestamp_seconds(F.lit(int(t1_epoch))))
+    )
+    if "bucket_date" not in df.columns:
+        return out
+    d0, d1 = (
+        _dt.datetime.fromtimestamp(int(t), tz=_dt.timezone.utc).date()
+        for t in (t0_epoch, t1_epoch)
+    )
+    return out.filter((F.col("bucket_date") >= d0) & (F.col("bucket_date") <= d1))
+
+
+def _dates(path: str) -> list[tuple[str, Path]]:
+    return [(p.name.split("=", 1)[1], p) for p in sorted(Path(path).glob("bucket_date=*"))]
+
+
+def apply_retention(path: str, keep_days: int, today: str) -> int:
+    """Drop the ``bucket_date=`` partitions older than today - keep_days
+    (keep_days < 0 keeps everything).  Directory deletes, no data rewrite,
+    surviving partitions untouched.  ``today`` is explicit (no wall-clock
+    read) so runs are deterministic and replayable.  Returns the number of
+    partitions removed."""
+    import datetime as _dt
+    import shutil
+
+    if keep_days < 0:
+        return 0
+    cutoff = (_dt.date.fromisoformat(today) - _dt.timedelta(days=keep_days)).isoformat()
+    expired = [p for d, p in _dates(path) if d < cutoff]
+    for p in expired:
+        shutil.rmtree(p)
+    return len(expired)
+
+
+def compact_tier_store(
+    spark: SparkSession,
+    path: str,
+    target_files: int = 1,
+    sort_within=None,
+) -> int:
+    """Small-file compaction: rewrite every ``bucket_date`` partition that
+    holds more than ``target_files`` parquet files into at most that many.
+    Rows are preserved exactly; partitions at or under the target keep
+    their files byte-identical.
+
+    ``sort_within`` (column names / Column expressions) also CLUSTERS each
+    rewritten partition: rows are sorted inside the task before the
+    writer's maxRecordsPerFile cuts files, so each file covers a contiguous
+    key slice and its parquet footer min/max prunes (``["series_id",
+    "bucket_ts"]`` for single-series range reads, a ``zorder.zvalue`` key
+    for either dimension).  Returns the number of partitions rewritten.
+    """
+    import datetime as _dt
+    import math
+
+    touched = [
+        _dt.date.fromisoformat(d)
+        for d, p in _dates(path)
+        if len(list(p.glob("*.parquet"))) > target_files
+    ]
+    if not touched:
+        return 0
+    df = read_tier_store(spark, path).filter(F.col("bucket_date").isin(touched))
+    # LOAD-BEARING shuffle: this job reads and dynamically overwrites the
+    # SAME parquet path.  The repartition() materializes every input row
+    # into shuffle files BEFORE commit-time partition deletion, so the
+    # write never reads a file the overwrite already deleted.  A refactor
+    # to coalesce()/no-shuffle would silently reintroduce that race —
+    # keep a shuffle boundary (or checkpoint/persist the read) here.
+    clustered = df.repartition(len(touched), "bucket_date")
+    if sort_within:
+        # the partition column leads so a task holding several dates still
+        # emits each one contiguously
+        clustered = clustered.sortWithinPartitions("bucket_date", *sort_within)
+    # the repartition puts each date wholly in one task (one file); the
+    # deterministic way to split it into ~target_files files is the
+    # writer's maxRecordsPerFile, sized from the largest touched date
+    biggest = df.groupBy("bucket_date").count().agg(F.max("count")).first()[0] or 1
+    (
+        clustered.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", math.ceil(biggest / target_files))
+        .partitionBy("bucket_date")
+        .parquet(path)
+    )
+    return len(touched)
 
 
 def _merge_tier_rows(
@@ -84,7 +190,7 @@ def _merge_tier_rows(
         F.to_date(bucket).alias("bucket_date"),
     )
     merged = committed.select(*batch_rows.columns).unionByName(batch_rows)
-    # LOAD-BEARING shuffle (see chunkstore.compact_chunks): the store
+    # LOAD-BEARING shuffle (as in compact_tier_store): the store
     # writer reads and dynamically overwrites the same path; this
     # repartition is the merge's only Exchange and materializes every
     # committed row into shuffle files before the overwrite deletes their
@@ -248,8 +354,10 @@ def apply_batch_once(
             raise RuntimeError(
                 f"batch {batch_id} has a dangling intent in {path}: a previous "
                 "attempt crashed inside the merge-commit window and it is unknown "
-                "whether its partial merge landed. Rebuild the touched dates from "
-                "the batch/OoO path, then clear the entry from _applied_batches.json"
+                "whether its partial merge landed. Find the affected dates with "
+                "rollup.audit_tier_consistency, recompute them from the raw points "
+                "with rollup_points, overwrite those bucket_date partitions, then "
+                "clear the entry from _applied_batches.json"
             )
         journal["batches"][str(batch_id)] = "intent"
         _write_journal(path, journal)

@@ -247,7 +247,7 @@ def main(argv: list[str] | None = None) -> None:
         log=log,
         partition_by=["shard"],
     )
-    sharded = spark.read.parquet(f"{shard_root}/part_key=all")
+    sharded = spark.read.parquet(shard_root)
     print(f"shard: processed={s0['processed']} skipped={s0['skipped']}")
 
     cfg = _tag(

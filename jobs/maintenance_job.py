@@ -2,21 +2,23 @@
 jobs/rollup_job.py.
 
 A running deployment accretes three kinds of debt that no query fixes:
-small files (streaming 1m commits and OoO repairs append per-batch
-parquet), expired data (tiers past their retention window), and dead
-metadata (superseded manifests + orphaned snapshot dirs in the snapshot
-store).  This job runs the three maintenance passes the engine already
-ships, in the order a deployment wants them:
+small files (the rollup job's per-task output files and every late
+batch's rewritten dates), expired data (tiers past their retention
+window), and dead metadata (superseded manifests + orphaned snapshot
+dirs in the snapshot store).  This job runs the three maintenance passes
+the engine already ships, in the order a deployment wants them:
 
-1. **retention** — drop whole date partitions past each tier's
-   keep-days (directory deletes, no rewrite; chunkstore.apply_retention)
-   so the compaction pass never rewrites bytes that are about to die;
-2. **compaction** — rewrite (chunk_date, bucket) partitions holding
-   more than --target-files parquet files, optionally CLUSTERING rows
-   while at it (--cluster series: hierarchical [series_id, chunk_start]
-   sort for single-series range reads; --cluster zorder: Morton key over
-   (series-hash, hour) for either-dimension footer pruning — see
-   sources/zorder.py);
+1. **retention** — drop whole ``bucket_date=`` partitions of each tier
+   store past --retention-days (directory deletes, no rewrite;
+   stream_tier.apply_retention) so the compaction pass never rewrites
+   bytes that are about to die.  Keep-days differ per tier, so run the
+   job once per tier store;
+2. **compaction** — rewrite the date partitions holding more than
+   --target-files parquet files (stream_tier.compact_tier_store),
+   optionally CLUSTERING rows while at it (--cluster series:
+   [series_id, bucket_ts] sort for single-series range reads; --cluster
+   zorder: Morton key over (series-hash, hour of bucket_ts) for
+   either-dimension footer pruning — see sources/zorder.py);
 3. **snapshot expiry** — keep the newest --keep-snapshots manifests of
    each snapshot store, delete unreferenced data files, sweep orphaned
    snapshot dirs older than the in-flight grace window.
@@ -32,7 +34,7 @@ Run on a cluster:
 
     PYFILES=$(python -c "from afspark.session import package_zip; print(package_zip())")
     spark-submit --py-files "$PYFILES" jobs/maintenance_job.py \\
-        --store /data/tiers/1m --retention-days 35 --today 2024-02-05 \\
+        --store /data/tiers/tier=1m --retention-days 35 --today 2024-02-05 \\
         --target-files 4 --cluster series \\
         --snapshot-store /data/snapstore --keep-snapshots 3
 """
@@ -53,17 +55,17 @@ def cluster_sort(mode: str):
     if mode == "none":
         return None
     if mode == "series":
-        return ["series_id", "chunk_start"]
+        return ["series_id", "bucket_ts"]
     if mode == "zorder":
         from afspark.sources.zorder import zvalue
 
-        # 8 bits of series-hash x hour-of-day (0..23, no wrap inside the
-        # daily partition): either-dimension footer pruning inside a
-        # (chunk_date, bucket) partition
+        # 8 bits of series-hash x hour of bucket_ts (0..23, no wrap inside
+        # the daily partition): either-dimension footer pruning inside a
+        # bucket_date partition
         return [
             zvalue(
                 F.pmod(F.xxhash64("series_id"), F.lit(256)),
-                F.floor(F.pmod(F.col("chunk_start"), F.lit(86400)) / 3600),
+                F.floor(F.pmod(F.unix_timestamp("bucket_ts"), F.lit(86400)) / 3600),
                 bits=8,
             )
         ]
@@ -73,7 +75,7 @@ def cluster_sort(mode: str):
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--store", action="append", default=[],
-                   help="chunk/tier store path (repeatable)")
+                   help="tier store path (repeatable)")
     p.add_argument("--retention-days", type=int, default=-1,
                    help="drop date partitions older than today - N days "
                         "(-1 = no retention pass)")
@@ -102,22 +104,20 @@ def main(argv: list[str] | None = None) -> None:
                 "inside the compaction rewrite)")
 
     spark = None
-    if args.store and (args.retention_days >= 0 or args.target_files > 0):
+    if args.store and args.target_files > 0:
         from afspark.session import get_session
 
         spark = get_session(app_name="afspark-maintenance")
 
-    from afspark.sources.chunkstore import apply_retention, compact_chunks
+    from afspark.streaming.stream_tier import apply_retention, compact_tier_store
 
     for store in args.store:
         if args.retention_days >= 0:
-            removed = apply_retention(
-                spark, {"store": (store, args.retention_days)}, args.today
-            )["store"]
+            removed = apply_retention(store, args.retention_days, args.today)
             print(json.dumps({"pass": "retention", "store": store,
                               "partitions_removed": removed}), flush=True)
         if args.target_files > 0:
-            rewritten = compact_chunks(
+            rewritten = compact_tier_store(
                 spark, store, target_files=args.target_files,
                 sort_within=cluster_sort(args.cluster),
             )

@@ -1,39 +1,42 @@
 """Production rollup job — the north_rule deployment contract, runnable.
 
-Pages -> windowed kernel scores -> all retention tiers, written as a
-date-partitionable tier store, RESUMABLE: the 1m stage is split into
-sample-time units, each unit's completion is recorded with rows/timing/
-fingerprint in the CheckpointLog (streaming/checkpoint.py), and a killed
-or re-run job skips every committed unit — only the unit in flight at
-the kill is redone (the data write + log row form an idempotent pair).
+Pages -> windowed kernel scores -> all retention tiers, written as the
+date-partitioned tier store (``{out}/tier=<name>/bucket_date=D/``, the
+layout of streaming/stream_tier.py that apply_batch_once merges late
+data into and jobs/maintenance_job.py retains and compacts), RESUMABLE:
+the 1m stage is split into one unit per UTC bucket date, each unit's
+completion is recorded with rows/timing in the CheckpointLog
+(streaming/checkpoint.py), and a killed or re-run job skips every
+committed unit — only the unit in flight at the kill is redone (unit D
+dynamic-overwrites only ``bucket_date=D``, so the data write + log row
+form an idempotent pair).
 
 Run it the way the north_rule says (any Spark cluster):
 
     PYFILES=$(python -c "from afspark.session import package_zip; print(package_zip())")
     spark-submit --py-files "$PYFILES" jobs/rollup_job.py \\
         --pages /data/pages.parquet --out /data/tiers \\
-        --checkpoint /data/tiers_ckpt --unit-seconds 86400
+        --checkpoint /data/tiers_ckpt
 
 or locally against the synthetic generator: ``--synth 20000``.
 
-Unit correctness: unit k owns the windows whose timestamp falls in
-[origin + k*U, origin + (k+1)*U) seconds — with U a multiple of the 1m
-bucket width and a minute-aligned origin (both asserted), every 1m
-bucket lies entirely inside one unit, so the written store has exactly
-one row per (series, bucket) and boundary-straddling WINDOWS are still
-computed exactly once (a window needs samples [start, start+winlen-1],
-so the unit reads the pages overlapping its sample range plus a
-winlen-1 halo — an offset-range filter, partition-prunable on an
-offset/date-laid-out page store; equivalence with the fused single-pass
-pipeline is pytest-asserted, tests/test_rollup_job.py).  Coarser tiers
-re-aggregate the committed 1m store (one unit each — they are ~60-3600x
-smaller; partition them by date too if a deployment's 1m store outgrows
-one task wave).
+Unit correctness: a window is stamped origin + win_start/fs, and unit D
+owns the windows stamped in D — exactly the 1m buckets with
+to_date(bucket_ts) == D, since a day edge is a minute edge.  The unit
+reads the pages overlapping the sample range those windows can touch (a
+winlen-1 halo past the last start; an offset-range filter, partition-
+prunable on an offset/date-laid-out page store), scores them and keeps
+the 1m rows of D, so boundary-straddling windows are computed exactly
+once (equivalence with the fused single-pass pipeline is pytest-asserted,
+tests/test_rollup_job.py).  Coarser tiers re-aggregate the committed
+finer tier, one unit each — they are ~60-3600x smaller.
 """
 
 from __future__ import annotations
 
 import argparse
+import datetime as dt
+import math
 import os
 import sys
 
@@ -51,8 +54,10 @@ from afspark.operators.rollup import (  # noqa: E402
 )
 from afspark.operators.score import score_pages  # noqa: E402
 from afspark.streaming.checkpoint import CheckpointLog, run_resumable  # noqa: E402
+from afspark.streaming.stream_tier import read_tier_store  # noqa: E402
 
 DEFAULT_FEATURES = "energy,spl,zcr"
+UTC = dt.timezone.utc
 
 
 def build_features(names: str) -> list:
@@ -67,37 +72,53 @@ def build_features(names: str) -> list:
     return feats
 
 
+def unit_dates(
+    offs: DataFrame, winlen: int, fs: float, origin_epoch: int
+) -> list[dt.date]:
+    """UTC dates of the first through the last window stamp.  Window
+    starts are per-series sample POSITIONS, so the last one follows the
+    LONGEST series, not the corpus total."""
+    n_samples = offs.agg(
+        F.max(F.col("sample_offset") + F.octet_length("text")).alias("n")
+    ).first()["n"] or 0
+    s_max = max(1, int(n_samples) - winlen + 1)  # last 1-based window start
+    first, last = (
+        dt.datetime.fromtimestamp(origin_epoch + s / fs, tz=UTC).date()
+        for s in (1, s_max)
+    )
+    return [first + dt.timedelta(days=i) for i in range((last - first).days + 1)]
+
+
 def score_unit(
     offs: DataFrame,
-    unit: int,
-    unit_samples: int,
+    date: dt.date,
     features: list,
     winlen: int,
     noverlap: int,
     fs: float,
     origin_epoch: int,
 ) -> DataFrame:
-    """1m-tier rows for the windows owned by sample-time unit ``unit``.
-
-    Ownership is the half-open sample interval [unit*U, (unit+1)*U) of
-    1-based window starts — with U a multiple of 60*fs and a
-    minute-aligned origin, 1m buckets never straddle units.
-    """
-    lo = max(1, unit * unit_samples)  # first owned 1-based window start
-    hi = (unit + 1) * unit_samples - 1  # last owned start
+    """1m-tier rows (with ``bucket_date``) of the windows stamped on ``date``."""
+    d0 = dt.datetime(date.year, date.month, date.day, tzinfo=UTC).timestamp()
+    # 1-based window starts stamped in [d0, d0 + 1 day), widened by one
+    # sample each side against float rounding in the stamp
+    lo = max(1, math.floor((d0 - origin_epoch) * fs) - 1)
+    hi = math.ceil((d0 + 86_400 - origin_epoch) * fs) + 1
     ln = F.octet_length("text")
     # pages overlapping the sample range any owned window can touch
     need = offs.filter(
         (F.col("sample_offset") + ln >= lo)
         & (F.col("sample_offset") + 1 <= hi + winlen - 1)
     )
-    scored = score_pages(need, features, winlen, noverlap, fs=fs).filter(
-        (F.col("win_start") >= lo) & (F.col("win_start") <= hi)
+    scored = score_pages(need, features, winlen, noverlap, fs=fs)
+    return (
+        rollup_points(scores_to_points(scored, fs, origin_epoch), TIERS["1m"])
+        .withColumn("bucket_date", F.to_date("bucket_ts"))
+        .filter(F.col("bucket_date") == F.lit(date))
     )
-    return rollup_points(scores_to_points(scored, fs, origin_epoch), TIERS["1m"])
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--pages", help="parquet of (url, warc_ts, html, text, lang)")
@@ -108,14 +129,8 @@ def main() -> None:
     ap.add_argument("--winlen", type=int, default=1024)
     ap.add_argument("--noverlap", type=int, default=512)
     ap.add_argument("--fs", type=float, default=1000.0)
-    ap.add_argument("--origin-epoch", type=int, default=1_699_999_980)  # minute-aligned
-    ap.add_argument(
-        "--unit-seconds",
-        type=int,
-        default=86_400,
-        help="resume-unit width in SAMPLE time (unit = this * fs samples)",
-    )
-    args = ap.parse_args()
+    ap.add_argument("--origin-epoch", type=int, default=1_699_999_980)
+    args = ap.parse_args(argv)
 
     from afspark.session import get_session
     from afspark.sources.pages import generate_pages, with_series_offsets
@@ -128,35 +143,16 @@ def main() -> None:
     )
     offs = with_series_offsets(pages).persist()
     features = build_features(args.features)
-    if args.unit_seconds % 60 != 0:
-        raise SystemExit("--unit-seconds must be a multiple of 60 (the 1m "
-                         "bucket width) so no bucket straddles a resume unit")
-    if args.origin_epoch % 60 != 0:
-        raise SystemExit("--origin-epoch must be minute-aligned")
-    if (args.unit_seconds * args.fs) % 1 != 0:
-        raise SystemExit("--unit-seconds * --fs must be an integer sample count")
-    unit_samples = int(args.unit_seconds * args.fs)
-    # units are per-series sample POSITIONS, so the unit count follows
-    # the LONGEST series (every series shorter than one unit lands
-    # entirely in unit 0), not the corpus total
-    n_samples = offs.agg(
-        F.max(F.col("sample_offset") + F.octet_length("text")).alias("n")
-    ).first()["n"] or 0
-    # last valid 1-based window start; its unit is floor(s_max/U) under
-    # the half-open [u*U, (u+1)*U) ownership (ceil(n/U) would drop the
-    # final window when winlen==1 and n is an exact unit multiple)
-    s_max = max(0, int(n_samples) - args.winlen + 1)
-    n_units = s_max // unit_samples + 1
+    dates = unit_dates(offs, args.winlen, args.fs, args.origin_epoch)
     log = CheckpointLog(spark, args.checkpoint)
 
     stats = run_resumable(
         spark,
         stage="score_1m",
-        partition_keys=[f"u{u:06d}" for u in range(n_units)],
+        partition_keys=[d.isoformat() for d in dates],
         process_fn=lambda key: score_unit(
             offs,
-            int(key[1:]),
-            unit_samples,
+            dt.date.fromisoformat(key),
             features,
             args.winlen,
             args.noverlap,
@@ -165,25 +161,26 @@ def main() -> None:
         ),
         out_path=f"{args.out}/tier=1m",
         log=log,
+        partition_by=["bucket_date"],
     )
     print(f"score_1m: {len(stats['processed'])} units processed, "
           f"{len(stats['skipped'])} skipped (resume)")
 
-    # coarser tiers re-aggregate the COMMITTED 1m store (read back, so a
+    # coarser tiers re-aggregate the COMMITTED finer tier (read back, so a
     # resumed job never recomputes scores), one resumable unit each
-    t1m = spark.read.parquet(f"{args.out}/tier=1m")
     prev_name = "1m"
     for name in ("1h", "1d", "30d"):
-        prev = t1m if prev_name == "1m" else spark.read.parquet(
-            f"{args.out}/tier={prev_name}"
-        )
+        prev = read_tier_store(spark, f"{args.out}/tier={prev_name}")
         s = run_resumable(
             spark,
             stage=f"rollup_{name}",
             partition_keys=["all"],
-            process_fn=lambda _k, p=prev, sec=TIERS[name]: rollup_tier(p, sec),
+            process_fn=lambda _k, p=prev, sec=TIERS[name]: rollup_tier(
+                p, sec
+            ).withColumn("bucket_date", F.to_date("bucket_ts")),
             out_path=f"{args.out}/tier={name}",
             log=log,
+            partition_by=["bucket_date"],
         )
         print(f"rollup_{name}: processed={s['processed']} skipped={s['skipped']}")
         prev_name = name

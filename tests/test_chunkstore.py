@@ -1,19 +1,26 @@
-"""Chunk store round-trip, out-of-order merge, and kill-resume tests."""
+"""Storage layer: the chunk codec round trip, the date-partitioned tier
+store's late merge, range read, retention and compaction, and kill-resume."""
 
+import datetime as dtm
+import os
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from afspark.operators.ooo import merge_out_of_order
-from afspark.sources.chunkstore import (
-    encode_chunks,
-    decode_chunks,
-    read_points,
-    write_chunk_store,
-)
+from afspark.operators.rollup import TIERS, read_tier_range, rollup_points
+from afspark.sources.chunkstore import decode_chunks, encode_chunks
 from afspark.streaming.checkpoint import CheckpointLog, run_resumable
+from afspark.streaming.stream_tier import (
+    apply_batch_once,
+    apply_retention,
+    compact_tier_store,
+    read_tier_store,
+)
+
+SCHEMA = "series_id string, ts timestamp, value double"
 
 
 @pytest.fixture()
@@ -35,6 +42,30 @@ def as_set(df):
     return {(r.series_id, r.ts, r.value) for r in df.collect()}
 
 
+def tier_rows(spark, store):
+    """Every tier row of the store, all columns, as a sorted list."""
+    return sorted(tuple(r) for r in read_tier_store(spark, store).collect())
+
+
+def append_tier(pts, store, tier_seconds=60):
+    """Append the points' tier rows in the store layout: each call adds a
+    file per date it covers (the small-file shape compaction folds)."""
+    (
+        rollup_points(pts, tier_seconds)
+        .withColumn("bucket_date", F.to_date("bucket_ts"))
+        .write.mode("append")
+        .partitionBy("bucket_date")
+        .parquet(store)
+    )
+
+
+def files_per_date(store):
+    return {
+        d.name: sorted(p.name for p in d.glob("*.parquet"))
+        for d in sorted(Path(store).glob("bucket_date=*"))
+    }
+
+
 def test_chunk_roundtrip_bit_exact(spark, points):
     chunks = encode_chunks(points, chunk_seconds=86_400)
     back = decode_chunks(chunks)
@@ -49,91 +80,35 @@ def test_chunk_roundtrip_bit_exact(spark, points):
     assert stats.b < 24 * stats.n
 
 
-def test_chunk_store_write_read(spark, points, tmpdir):
-    write_chunk_store(points, f"{tmpdir}/store", chunk_seconds=86_400)
-    back = read_points(spark, f"{tmpdir}/store")
-    assert as_set(back) == as_set(points)
-    # partition pruning: chunk_date is a partition column
-    store = spark.read.parquet(f"{tmpdir}/store")
-    assert "chunk_date" in store.columns
-
-
-def test_ooo_merge_equals_clean_run(spark, points, tmpdir):
-    """Committing on-time data then merging the late slice == one clean run."""
-    cutoff = points.agg(F.percentile_approx("ts", 0.8)).first()[0]
-    on_time = points.filter(F.col("ts") <= F.lit(cutoff))
-    late = points.filter(F.col("ts") > F.lit(cutoff))
-    assert late.count() > 0
-    store = f"{tmpdir}/store"
-    write_chunk_store(on_time, store, chunk_seconds=86_400)
-    n_files_before = len(
-        [r for r in spark.read.parquet(store).inputFiles()]
-    )
-    merge_out_of_order(spark, store, late, chunk_seconds=86_400)
-    merged = read_points(spark, store)
-    assert as_set(merged) == as_set(points)
-    assert n_files_before > 0
-
-
-def test_ooo_merge_idempotent_redelivery(spark, points, tmpdir):
-    """Merging the same late batch twice changes nothing."""
-    cutoff = points.agg(F.percentile_approx("ts", 0.9)).first()[0]
-    on_time = points.filter(F.col("ts") <= F.lit(cutoff))
-    late = points.filter(F.col("ts") > F.lit(cutoff))
-    store = f"{tmpdir}/store"
-    write_chunk_store(on_time, store, chunk_seconds=86_400)
-    merge_out_of_order(spark, store, late, chunk_seconds=86_400)
-    once = as_set(read_points(spark, store))
-    merge_out_of_order(spark, store, late, chunk_seconds=86_400)
-    twice = as_set(read_points(spark, store))
-    assert once == twice == as_set(points)
-
-
-def test_ooo_merge_touches_only_affected_chunks(spark, points, tmpdir):
-    """Late rows for one series/day must not rewrite unrelated chunks."""
-    store = f"{tmpdir}/store"
-    write_chunk_store(points, store, chunk_seconds=86_400)
-    before = {
-        (r.series_id, r.chunk_start): (bytes(r.ts_blob), bytes(r.val_blob))
-        for r in spark.read.parquet(store).collect()
-    }
-    one = points.orderBy("series_id", "ts").limit(1).collect()[0]
-    late = spark.createDataFrame(
-        [(one.series_id, one.ts, one.value + 1.0)], "series_id string, ts timestamp, value double"
-    )
-    merge_out_of_order(spark, store, late, chunk_seconds=86_400)
-    after = {
-        (r.series_id, r.chunk_start): (bytes(r.ts_blob), bytes(r.val_blob))
-        for r in spark.read.parquet(store).collect()
-    }
-    changed = [k for k in before if before[k] != after.get(k)]
-    assert len(changed) == 1  # exactly the one affected chunk rewritten
-
-
 def test_run_resumable_partitioned_empty_unit_completes(spark, points, tmpdir):
-    """A partition_by unit whose DataFrame is EMPTY must still commit:
-    dynamic-partition writes emit no data files for zero rows, so the
-    readback needs the writer's schema supplied explicitly (schema
-    inference on a _SUCCESS-only directory raises and the unit could
-    never be marked complete)."""
+    """A partition_by unit whose DataFrame is EMPTY must still commit (with
+    0 rows), and a unit never deletes another unit's partitions: the
+    partitioned write is a dynamic overwrite into one store."""
     log = CheckpointLog(spark, f"{tmpdir}/ckpt_empty")
     out = f"{tmpdir}/out_empty"
+    src = points.withColumn("d", F.to_date("ts"))
+    days = sorted(r.d for r in src.select("d").distinct().collect())
 
     def process(key):
-        src = points.withColumn("d", F.to_date("ts"))
         if key == "empty":
             return src.filter(F.lit(False))
-        return src
+        return src.filter(F.col("d") == F.lit(days[0] if key == "first" else days[1]))
 
     r1 = run_resumable(
-        spark, "st", ["empty", "full"], process, out, log, partition_by=["d"]
+        spark, "st", ["first", "empty", "second"], process, out, log,
+        partition_by=["d"],
     )
-    assert r1["processed"] == ["empty", "full"]
+    assert r1["processed"] == ["first", "empty", "second"]
+    rows = {r.partition_key: r.rows for r in log.metrics().collect()}
+    assert rows["empty"] == 0 and rows["first"] > 0 and rows["second"] > 0
+    assert sorted(p.name for p in Path(out).glob("d=*")) == [f"d={d}" for d in days[:2]]
+    assert spark.read.parquet(out).count() == rows["first"] + rows["second"]
     # the empty unit is committed: a rerun skips it
     r2 = run_resumable(
-        spark, "st", ["empty", "full"], process, out, log, partition_by=["d"]
+        spark, "st", ["first", "empty", "second"], process, out, log,
+        partition_by=["d"],
     )
-    assert sorted(r2["skipped"]) == ["empty", "full"]
+    assert sorted(r2["skipped"]) == ["empty", "first", "second"]
 
 
 def test_kill_resume_skips_completed(spark, points, tmpdir):
@@ -168,133 +143,165 @@ def test_kill_resume_skips_completed(spark, points, tmpdir):
     assert m.filter(F.col("rows") > 0).count() == len(keys)
 
 
-def test_range_read_prunes_partitions(spark, points, tmpdir):
-    store = f"{tmpdir}/store"
-    write_chunk_store(points, store, chunk_seconds=86_400)
-    from afspark.sources.chunkstore import read_points_range
-
-    full_files = (
-        spark.read.parquet(store).select(F.input_file_name()).distinct().count()
-    )
-    ranged = spark.read.parquet(store).filter(
-        (F.col("chunk_date") >= "2024-01-05") & (F.col("chunk_date") <= "2024-01-07")
-    )
-    # files actually read at execution — partition pruning must bite
-    read_files = ranged.select(F.input_file_name()).distinct().count()
-    assert 0 < read_files < full_files
-    pts = read_points_range(spark, store, "2024-01-05", "2024-01-07")
-    got_days = {r.d for r in pts.select(F.to_date("ts").alias("d")).distinct().collect()}
-    assert got_days == {
-        r.d
-        for r in points.filter(
-            (F.to_date("ts") >= "2024-01-05") & (F.to_date("ts") <= "2024-01-07")
-        ).select(F.to_date("ts").alias("d")).distinct().collect()
-    }
-
-
-def test_retention_expiry(spark, points, tmpdir):
-    from afspark.sources.chunkstore import expire_chunks, read_points
-
-    store = f"{tmpdir}/store"
-    write_chunk_store(points, store, chunk_seconds=86_400)
-    before = read_points(spark, store).count()
-    removed = expire_chunks(spark, store, "2024-01-10")
-    assert removed > 0
-    kept = read_points(spark, store)
-    assert kept.filter(F.to_date("ts") < "2024-01-10").count() == 0
-    expected = points.filter(F.to_date("ts") >= "2024-01-10").count()
-    assert kept.count() == expected < before
-    # idempotent
-    assert expire_chunks(spark, store, "2024-01-10") == 0
-
-
 def test_ooo_merge_rewrite_volume_proportional_to_touched_buckets(
     spark, points, tmpdir
 ):
-    """The bucketed layout contract: a late batch touching one series on
-    one day rewrites ONLY that (chunk_date, bucket) partition directory;
-    every other partition keeps byte-identical files (never read, never
-    written)."""
-    import os
-    from afspark.sources.chunkstore import bucket_expr, read_store_meta
-
-    store = f"{tmpdir}/store"
-    write_chunk_store(points, store, chunk_seconds=86_400, n_buckets=8)
-    assert read_store_meta(store)["n_buckets"] == 8
+    """A late point for one series on one day rewrites ONLY that day's
+    bucket_date partition; every other date keeps byte-identical files
+    (never read, never written), and the merged store is correct."""
 
     def file_map(root):
         m = {}
         for dirpath, _dirs, files in os.walk(root):
-            rel = os.path.relpath(dirpath, root)
             for f in files:
                 if f.endswith(".parquet"):
                     p = os.path.join(dirpath, f)
-                    m.setdefault(rel, set()).add((f, os.path.getsize(p)))
+                    m.setdefault(os.path.relpath(dirpath, root), set()).add(
+                        (f, os.path.getsize(p))
+                    )
         return m
 
+    store = f"{tmpdir}/store"
+    assert apply_batch_once(spark, store, points, 0, TIERS["1m"])
     before = file_map(store)
     one = points.orderBy("series_id", "ts").limit(1).collect()[0]
-    late = spark.createDataFrame(
-        [(one.series_id, one.ts, one.value + 1.0)],
-        "series_id string, ts timestamp, value double",
-    )
-    merge_out_of_order(spark, store, late, chunk_seconds=86_400)
+    late = spark.createDataFrame([(one.series_id, one.ts, one.value + 1.0)], SCHEMA)
+    assert apply_batch_once(spark, store, late, 1, TIERS["1m"])
     after = file_map(store)
 
-    bkt = (
-        spark.createDataFrame([(one.series_id,)], "series_id string")
-        .select(bucket_expr(F.col("series_id"), 8).alias("b"))
-        .first()
-        .b
-    )
-    date = one.ts.strftime("%Y-%m-%d")
-    touched = f"chunk_date={date}/bucket={bkt}"
-    assert touched in before and touched in after
+    touched = f"bucket_date={one.ts.date()}"
+    assert len(before) > 1 and touched in before and touched in after
     changed = {d for d in set(before) | set(after) if before.get(d) != after.get(d)}
     assert changed == {touched}
-    # and the merged data is still correct
-    merged = as_set(read_points(spark, store))
-    assert (one.series_id, one.ts, one.value + 1.0) in merged
+    assert tier_rows(spark, store) == sorted(
+        tuple(r)
+        for r in rollup_points(points.unionByName(late), TIERS["1m"])
+        .withColumn("bucket_date", F.to_date("bucket_ts"))
+        .collect()
+    )
 
 
 def test_ooo_locating_scan_partition_pruned(spark, points, tmpdir):
-    """The repair's locating read must prune (chunk_date, bucket)
-    partitions derived from the late batch — not scan the whole store
-    (VERDICT r2 'What's wrong' #4)."""
-    from afspark.operators.ooo import chunk_key, pruned_store_scan
-
+    """The merge reads only the late batch's dates: with every other date's
+    files made unreadable, merging a late point still succeeds."""
     store = f"{tmpdir}/store"
-    write_chunk_store(points, store, chunk_seconds=86_400, n_buckets=8)
+    assert apply_batch_once(spark, store, points, 0, TIERS["1m"])
     one = points.orderBy("series_id", "ts").limit(1).collect()[0]
-    late = spark.createDataFrame(
-        [(one.series_id, one.ts, one.value + 1.0)],
-        "series_id string, ts timestamp, value double",
+    touched = f"bucket_date={one.ts.date()}"
+    others = [d for d in Path(store).glob("bucket_date=*") if d.name != touched]
+    assert others
+    for d in others:
+        for f in d.glob("*.parquet"):
+            f.write_bytes(b"not parquet")
+    late = spark.createDataFrame([(one.series_id, one.ts, one.value + 1.0)], SCHEMA)
+    assert apply_batch_once(spark, store, late, 1, TIERS["1m"])
+    merged = read_tier_store(spark, store).filter(
+        F.col("bucket_date") == one.ts.date()
     )
-    affected = late.select(
-        "series_id", chunk_key(F.col("ts"), 86_400).alias("chunk_start")
-    ).distinct()
-    scan = pruned_store_scan(spark, store, affected, n_buckets=8)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    # the partition predicate reaches the scan node
-    assert "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "chunk_date" in seg and "bucket" in seg
-    # and it actually prunes: exactly the one touched bucket-day survives
-    n_parts_total = spark.read.parquet(store).select(
-        "chunk_date", "bucket"
-    ).distinct().count()
-    n_parts_scanned = scan.select("chunk_date", "bucket").distinct().count()
-    assert n_parts_scanned == 1 < n_parts_total
+    want = rollup_points(points.unionByName(late), TIERS["1m"]).filter(
+        F.to_date("bucket_ts") == one.ts.date()
+    )
+    assert sorted(tuple(r) for r in merged.drop("bucket_date").collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )
+
+
+def test_range_read_prunes_partitions(spark, points, tmpdir):
+    """read_tier_range reads only the dates of the range (every other
+    date's files are unreadable) and returns exactly the tier rows whose
+    bucket_ts falls in it."""
+    store = f"{tmpdir}/store"
+    append_tier(points, store, TIERS["1h"])
+    t0 = int(dtm.datetime(2024, 1, 5, tzinfo=dtm.timezone.utc).timestamp())
+    t1 = int(dtm.datetime(2024, 1, 8, tzinfo=dtm.timezone.utc).timestamp())
+    # date-level pruning keeps Jan 5..8 (a bucket_ts < t1 can't be later
+    # than t1's date); the bucket_ts filter then drops Jan 8
+    in_range = {f"bucket_date=2024-01-0{d}" for d in (5, 6, 7, 8)}
+    others = [d for d in Path(store).glob("bucket_date=*") if d.name not in in_range]
+    assert others
+    for d in others:
+        for f in d.glob("*.parquet"):
+            f.write_bytes(b"not parquet")
+    name, df = read_tier_range(spark, {"1h": store}, t0, t1, target_points=10)
+    assert name == "1h"
+    want = rollup_points(points, TIERS["1h"]).filter(
+        (F.col("bucket_ts") >= "2024-01-05") & (F.col("bucket_ts") < "2024-01-08")
+    )
+    assert sorted(tuple(r) for r in df.drop("bucket_date").collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )
+
+
+def test_retention_expiry(spark, points, tmpdir):
+    store = f"{tmpdir}/store"
+    append_tier(points, store, TIERS["1h"])
+    before = read_tier_store(spark, store).count()
+    # cutoff 2024-01-10: keep 5 days back from 2024-01-15
+    removed = apply_retention(store, 5, "2024-01-15")
+    assert removed > 0
+    kept = read_tier_store(spark, store)
+    assert kept.filter(F.col("bucket_date") < "2024-01-10").count() == 0
+    expected = (
+        rollup_points(points, TIERS["1h"])
+        .filter(F.to_date("bucket_ts") >= "2024-01-10")
+        .count()
+    )
+    assert kept.count() == expected < before
+    # idempotent
+    assert apply_retention(store, 5, "2024-01-15") == 0
+
+
+def _day_points(spark, days, hours=range(4)):
+    rows = [
+        ("s", dtm.datetime(2024, 1, d, h, 0, 0), float(d * 100 + h))
+        for d in days
+        for h in hours
+    ]
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def test_retention_policy_per_store(spark, tmpdir):
+    """Each store drops only the dates older than its own horizon;
+    keep_days < 0 disables expiry; surviving rows intact."""
+    raw, tier = f"{tmpdir}/raw", f"{tmpdir}/tier"
+    append_tier(_day_points(spark, [1, 2, 3, 4, 5]), raw)
+    append_tier(_day_points(spark, [1, 2, 3, 4, 5]), tier)
+
+    assert apply_retention(raw, 2, "2024-01-05") == 2  # Jan 1-2 (cutoff Jan 3)
+    assert apply_retention(tier, -1, "2024-01-05") == 0
+    days_left = sorted(
+        r.d for r in read_tier_store(spark, raw)
+        .select(F.dayofmonth("bucket_date").alias("d")).distinct().collect()
+    )
+    assert days_left == [3, 4, 5]
+    assert read_tier_store(spark, raw).count() == 12
+    assert read_tier_store(spark, tier).select("bucket_date").distinct().count() == 5
+
+
+def test_retention_expires_tier_store_layout(spark, tmpdir):
+    """apply_retention ages out a store written by the late-data merge."""
+    from afspark.streaming.stream_tier import refresh_tier_store
+
+    rows = [
+        ("s", dtm.datetime(2024, 1, d, h, 0, 0), float(d + h))
+        for d in (1, 2, 3, 4)
+        for h in range(3)
+    ]
+    pts = spark.createDataFrame(rows, SCHEMA)
+    store = f"{tmpdir}/tier1h"
+    refresh_tier_store(spark, store, pts, TIERS["1h"])
+    assert read_tier_store(spark, store).count() == 12
+
+    assert apply_retention(store, 2, "2024-01-04") == 1  # only Jan 1 < Jan 2
+    left = read_tier_store(spark, store)
+    assert left.filter(F.col("bucket_date") < "2024-01-02").count() == 0
+    assert left.count() == 9
 
 
 def test_compaction_merges_small_files_preserving_points(spark, tmpdir):
-    """compact_chunks: touched partitions end at <=1 file, decoded points
-    are multiset-identical, and a partition already at 1 file is left
-    byte-identical (never rewritten)."""
-    import datetime as dtm
-    from pathlib import Path
-
-    from afspark.sources.chunkstore import compact_chunks, write_chunk_store
+    """compact_tier_store: touched dates end at <=1 file, tier rows are
+    identical, and a date already at 1 file is left byte-identical
+    (never rewritten)."""
 
     def mk(day, h0, h1):
         rows = [
@@ -302,188 +309,83 @@ def test_compaction_merges_small_files_preserving_points(spark, tmpdir):
             for h in range(h0, h1)
             for m in range(0, 60, 15)
         ]
-        return spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
+        return spark.createDataFrame(rows, SCHEMA)
 
     store = f"{tmpdir}/store"
-    write_chunk_store(mk(1, 0, 12).union(mk(2, 0, 12)), store, mode="overwrite")
-
-    def files_per_dir():
-        return {
-            f"{d.name}/{b.name}": sorted(p.name for p in b.glob("*.parquet"))
-            for d in Path(store).glob("chunk_date=*")
-            for b in d.glob("bucket=*")
-        }
-
-    def point_multiset():
-        return sorted(
-            (r.series_id, r.ts, r.value) for r in read_points(spark, store).collect()
-        )
-
-    # first pass normalizes the fresh write's fan-out to 1 file/partition
-    assert any(len(v) > 1 for v in files_per_dir().values())
-    pts0 = point_multiset()
-    assert compact_chunks(spark, store) >= 1
-    assert all(len(v) <= 1 for v in files_per_dir().values())
-    assert point_multiset() == pts0
+    append_tier(mk(1, 0, 6), store)
+    append_tier(mk(1, 6, 12).union(mk(2, 0, 12)), store)
+    assert len(files_per_date(store)["bucket_date=2024-01-01"]) == 2
+    rows0 = tier_rows(spark, store)
+    assert compact_tier_store(spark, store) >= 1
+    assert all(len(v) <= 1 for v in files_per_date(store).values())
+    assert tier_rows(spark, store) == rows0
 
     # append to day 1 only; day 2 must then survive compaction byte-identical
-    write_chunk_store(mk(1, 12, 24), store, mode="append")
-    before_files = files_per_dir()
-    day2_key = next(k for k in before_files if "2024-01-02" in k)
-    assert len(before_files[day2_key]) == 1
-    day2_path = Path(store) / day2_key.split("/")[0] / day2_key.split("/")[1]
-    day2_bytes = (day2_path / before_files[day2_key][0]).read_bytes()
-    before_pts = point_multiset()
+    append_tier(mk(1, 12, 24), store)
+    before_files = files_per_date(store)
+    day2 = "bucket_date=2024-01-02"
+    assert len(before_files[day2]) == 1
+    day2_bytes = (Path(store) / day2 / before_files[day2][0]).read_bytes()
+    before_rows = tier_rows(spark, store)
 
-    n = compact_chunks(spark, store)
-    assert n >= 1
-    after_files = files_per_dir()
+    assert compact_tier_store(spark, store) == 1
+    after_files = files_per_date(store)
     assert all(len(v) <= 1 for v in after_files.values())
-    assert after_files[day2_key] == before_files[day2_key]
-    assert (day2_path / after_files[day2_key][0]).read_bytes() == day2_bytes
-    assert point_multiset() == before_pts
+    assert after_files[day2] == before_files[day2]
+    assert (Path(store) / day2 / after_files[day2][0]).read_bytes() == day2_bytes
+    assert tier_rows(spark, store) == before_rows
     # idempotent: another pass is a no-op
-    assert compact_chunks(spark, store) == 0
+    assert compact_tier_store(spark, store) == 0
 
 
-def test_retention_policy_per_store(spark, tmpdir):
-    """Policy map drops only partitions older than each store's horizon;
-    keep_days < 0 disables expiry; surviving points intact."""
-    import datetime as dtm
-
-    from afspark.sources.chunkstore import apply_retention, write_chunk_store
-
-    def mk(days):
-        rows = [
-            ("s", dtm.datetime(2024, 1, d, h, 0, 0), float(d * 100 + h))
-            for d in days
-            for h in range(4)
-        ]
-        return spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
-
-    raw, tier = f"{tmpdir}/raw", f"{tmpdir}/tier"
-    write_chunk_store(mk([1, 2, 3, 4, 5]), raw, mode="overwrite")
-    write_chunk_store(mk([1, 2, 3, 4, 5]), tier, mode="overwrite")
-
-    removed = apply_retention(
-        spark, {"raw": (raw, 2), "tier": (tier, -1)}, today="2024-01-05"
-    )
-    assert removed == {"raw": 2, "tier": 0}  # Jan 1-2 dropped (cutoff Jan 3)
-    days_left = sorted(
-        r.d for r in read_points(spark, raw).select(F.dayofmonth("ts").alias("d")).distinct().collect()
-    )
-    assert days_left == [3, 4, 5]
-    tier_days = read_points(spark, tier).select(F.dayofmonth("ts").alias("d")).distinct().count()
-    assert tier_days == 5
-
-
-def test_retention_expires_tier_store_layout(spark, tmpdir):
-    """apply_retention must age out bucket_date= tier stores (stream_tier
-    layout), not only chunk_date= chunk stores."""
-    import datetime as dtm
-
-    from afspark.operators.rollup import TIERS
-    from afspark.sources.chunkstore import apply_retention
-    from afspark.streaming.stream_tier import read_tier_store, refresh_tier_store
-
+def _series_points(spark, n_series):
     rows = [
-        ("s", dtm.datetime(2024, 1, d, h, 0, 0), float(d + h))
-        for d in (1, 2, 3, 4)
-        for h in range(3)
-    ]
-    pts = spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
-    store = f"{tmpdir}/tier1h"
-    refresh_tier_store(spark, store, pts, TIERS["1h"])
-    assert read_tier_store(spark, store).count() == 12
-
-    removed = apply_retention(spark, {"1h": (store, 2)}, today="2024-01-04")
-    assert removed == {"1h": 1}  # only Jan 1 is older than Jan 2 cutoff
-    left = read_tier_store(spark, store)
-    assert left.filter(F.col("bucket_date") < "2024-01-02").count() == 0
-    assert left.count() == 9
-
-
-def test_compaction_target_files_splits_partition(spark, tmpdir):
-    """target_files > 1: a partition's rows spread across up to that many
-    files (series-hash salt), preserving points."""
-    import datetime as dtm
-    from pathlib import Path
-
-    from afspark.sources.chunkstore import compact_chunks, write_chunk_store
-
-    rows = [
-        (f"s{i}", dtm.datetime(2024, 1, 1, h, m, 0), float(i * 1000 + h * 60 + m))
-        for i in range(8)
+        (f"s{i:02d}", dtm.datetime(2024, 1, 1, h, m, 0), float(i * 1000 + h * 60 + m))
+        for i in range(n_series)
         for h in range(6)
         for m in (0, 30)
     ]
-    pts = spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def test_compaction_target_files_splits_partition(spark, tmpdir):
+    """target_files > 1: a date's rows spread across up to that many
+    files, preserving rows."""
+    pts = _series_points(spark, 8)
     store = f"{tmpdir}/store"
-    write_chunk_store(pts, store, mode="overwrite", n_buckets=1)
-
-    def points_set():
-        return sorted(
-            (r.series_id, r.ts, r.value) for r in read_points(spark, store).collect()
-        )
-
-    before = points_set()
-    assert compact_chunks(spark, store, target_files=2) >= 1
-    counts = [
-        len(list(b.glob("*.parquet")))
-        for d in Path(store).glob("chunk_date=*")
-        for b in d.glob("bucket=*")
-    ]
-    assert all(c <= 2 for c in counts)
-    assert any(c == 2 for c in counts)  # 8 series hash into both salts
-    assert points_set() == before
+    for lo, hi in (("s00", "s03"), ("s03", "s06"), ("s06", "s99")):
+        append_tier(pts.filter((F.col("series_id") >= lo) & (F.col("series_id") < hi)), store)
+    before = tier_rows(spark, store)
+    assert compact_tier_store(spark, store, target_files=2) == 1
+    counts = [len(v) for v in files_per_date(store).values()]
+    assert counts == [2]
+    assert tier_rows(spark, store) == before
 
 
 def test_compaction_sort_within_clusters_files_for_pruning(spark, tmpdir):
     """sort_within clustering: after compaction with a (series_id,
-    chunk_start) sort, each output file covers a contiguous series slice —
+    bucket_ts) sort, each output file covers a contiguous series slice —
     footer min/max on series_id prunes files for single-series reads
-    (measured on the real written footers), with points preserved exactly."""
-    import datetime as dtm
-    from pathlib import Path
-
-    from afspark.sources.chunkstore import compact_chunks, write_chunk_store
+    (measured on the real written footers), with rows preserved exactly."""
     from afspark.sources.zorder import file_envelopes
 
-    rows = [
-        (f"s{i:02d}", dtm.datetime(2024, 1, 1, h, m, 0), float(i * 1000 + h * 60 + m))
-        for i in range(16)
-        for h in range(6)
-        for m in (0, 30)
-    ]
-    pts = spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
+    pts = _series_points(spark, 16)
     store = f"{tmpdir}/store"
-    # streaming-shaped ingest: several small appends -> many small files
-    write_chunk_store(pts.filter(F.col("series_id") < "s04"), store,
-                      mode="overwrite", n_buckets=1)
-    for lo, hi in (("s04", "s08"), ("s08", "s12"), ("s12", "s99")):
-        write_chunk_store(
-            pts.filter((F.col("series_id") >= lo) & (F.col("series_id") < hi)),
-            store, mode="append", n_buckets=1,
-        )
-
-    before = sorted(
-        (r.series_id, r.ts, r.value) for r in read_points(spark, store).collect()
-    )
+    # streaming-shaped ingest: several small appends -> many small files,
+    # each spanning series from the whole domain
+    for h in range(6):
+        append_tier(pts.filter(F.hour("ts") == h), store)
+    assert len(files_per_date(store)["bucket_date=2024-01-01"]) > 4
+    before = tier_rows(spark, store)
     assert (
-        compact_chunks(
-            spark, store, target_files=4, sort_within=["series_id", "chunk_start"]
+        compact_tier_store(
+            spark, store, target_files=4, sort_within=["series_id", "bucket_ts"]
         )
-        >= 1
+        == 1
     )
-    after = sorted(
-        (r.series_id, r.ts, r.value) for r in read_points(spark, store).collect()
-    )
-    assert after == before
+    assert tier_rows(spark, store) == before
 
-    bdir = next(
-        b for d in Path(store).glob("chunk_date=*") for b in d.glob("bucket=*")
-    )
-    env = file_envelopes(str(bdir), ["series_id"])
+    env = file_envelopes(str(next(Path(store).glob("bucket_date=*"))), ["series_id"])
     assert len(env) >= 3  # the partition really split
     # tight envelopes: a single-series equality predicate keeps exactly
     # the files whose [min, max] straddles it — at most 2 of the splits

@@ -204,7 +204,7 @@ def test_cli_resume_and_param_scoping(spark, sf_dir, tmp_path, capsys):
     # parquet files per shard dir, not one per input task per shard
     shard_dirs = [d for d in os.listdir(out) if d.startswith("sharded-")]
     assert len(shard_dirs) == 1  # same --docs/--units/--files-per-shard
-    shard_store = f"{out}/{shard_dirs[0]}/part_key=all"
+    shard_store = f"{out}/{shard_dirs[0]}"
     for d in sorted(os.listdir(shard_store)):
         if not d.startswith("shard="):
             continue

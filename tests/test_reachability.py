@@ -41,7 +41,6 @@ ALLOWED = {
     "streaming.stream_m4.stream_m4": STREAM_TWIN.format("lttb.m4_downsample"),
     "streaming.stream_recrawl.streaming_recrawl_deltas":
         STREAM_TWIN.format("recrawl.recrawl_deltas"),
-    "streaming.stream_rollup.stream_rollup_1m": STREAM_TWIN.format("rollup_points"),
     "streaming.stream_score.streaming_score": STREAM_TWIN.format("kernels.score_local"),
     "streaming.stream_sessions.stream_session_stats":
         STREAM_TWIN.format("sessions.session_stats"),
@@ -79,20 +78,7 @@ ALLOWED = {
     "operators.lttb.lttb_numpy": "local numpy twin the LTTB operator is tested against",
     "operators.hdrsketch.hdr_refresh_incremental":
         "incremental refresh of the HDR sketch tier, tested == full rebuild",
-    # storage layer: chunk store, out-of-order repair, layout and manifest
-    "sources.chunkstore.bucket_expr": "chunk-store layout contract (series -> bucket)",
-    "sources.chunkstore.write_store_meta":
-        "chunk-store writer step, called by write_chunk_store",
-    "sources.chunkstore.read_store_meta":
-        "chunk-store reader step, called by the OoO repair path",
-    "sources.chunkstore.write_chunk_store":
-        "chunk-store writer; its stores are what maintenance_job compacts",
-    "sources.chunkstore.read_points": "chunk-store reader",
-    "sources.chunkstore.read_points_range": "chunk-store date-pruned range read",
-    "operators.ooo.chunk_key": "OoO repair: chunk key of a late point",
-    "operators.ooo.pruned_store_scan": "OoO repair: date-pruned store scan",
-    "operators.ooo.merge_out_of_order":
-        "late-batch repair of the chunk store (batch OoO path)",
+    # storage layer: page layout, z-order clustering and manifest
     "sources.pages.write_pages_table": "pages writer with the partitioned layout",
     "sources.pages.read_pages_table": "pages reader for write_pages_table's layout",
     "sources.pages.derive_samples_sql":

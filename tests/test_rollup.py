@@ -282,6 +282,58 @@ def test_read_tier_range_prunes_dates(spark, tmpdir, points):
     assert min(dates) >= "2024-01-05" and max(dates) < "2024-03-01"
 
 
+def test_all_range_readers_prune_bucket_dates(spark, tmpdir, points):
+    """read_tier_range, serve_range and stitched_range_read each put a
+    bucket_date PartitionFilter on every scan of a read_tier_store frame,
+    and pruning leaves their rows unchanged."""
+    from afspark.operators.rollup import (
+        read_tier_range, rollup_tier, serve_range, stitched_range_read,
+    )
+    from afspark.streaming.stream_tier import read_tier_store
+
+    stores = {}
+    t1h = rollup_points(points, TIERS["1h"])
+    for name, tier in (("1h", t1h), ("1d", rollup_tier(t1h, TIERS["1d"]))):
+        stores[name] = f"{tmpdir}/t{name}"
+        tier.withColumn("bucket_date", F.to_date("bucket_ts")).write.partitionBy(
+            "bucket_date"
+        ).parquet(stores[name])
+    opened = {n: read_tier_store(spark, p) for n, p in stores.items()}
+    bare = {n: df.drop("bucket_date") for n, df in opened.items()}
+    secs = {n: TIERS[n] for n in stores}
+    day = 86_400
+    t0 = int(dt.datetime(2024, 1, 5, tzinfo=dt.timezone.utc).timestamp())
+    t1, now = t0 + 6 * day, t0 + 9 * day
+    retention = {"1h": 5 * day, "1d": 400 * day}
+
+    def stitched(tiers):
+        return stitched_range_read(tiers, secs, retention, now, t0 - 3 * day, t1)
+
+    reads = {
+        "read_tier_range": (
+            read_tier_range(spark, {"1h": stores["1h"]}, t0, t1, target_points=10)[1],
+            t1h.filter(
+                (F.col("bucket_ts") >= F.timestamp_seconds(F.lit(t0)))
+                & (F.col("bucket_ts") < F.timestamp_seconds(F.lit(t1)))
+            ),
+        ),
+        "serve_range": (
+            serve_range(opened, secs, t0, t1, max_points=10)[2],
+            serve_range(bare, secs, t0, t1, max_points=10)[2],
+        ),
+        "stitched_range_read": (stitched(opened), stitched(bare)),
+    }
+    for reader, (got, want) in reads.items():
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+        assert scans, reader
+        for ln in scans:
+            filters = ln.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+            assert "bucket_date" in filters, (reader, ln)
+        cols = [c for c in got.columns if c != "bucket_date"]
+        assert sorted(got.select(cols).collect()) == sorted(want.select(cols).collect())
+
+
 def test_gapfill_locf_max_gap_staleness(spark):
     """Planted 5-bucket outage with max_gap=3: first 3 filled, rest null."""
     rows = [

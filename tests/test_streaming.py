@@ -1,4 +1,5 @@
-"""Streaming 1m rollup == batch rollup on the same data (+ watermark drop)."""
+"""Structured Streaming twins == their batch operators, and the tier store's
+late-data merge (apply_batch_once) == a full rollup_points recompute."""
 
 import shutil
 import tempfile
@@ -7,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from afspark.operators.rollup import rollup_points
-from afspark.streaming.stream_rollup import stream_rollup_1m
 
 SCHEMA = "series_id string, ts timestamp, value double"
 
@@ -37,41 +37,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="afspark_stream_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_rollup_matches_batch(spark, sf_dir, tmpdir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = ev.select(
-        F.col("user_id").cast("string").alias("series_id"), "ts", "value"
-    )
-    src = f"{tmpdir}/in"
-    # two file drops simulate two micro-batches
-    a = pts.filter(F.col("event_id") % 2 == 0)
-    b = pts.filter(F.col("event_id") % 2 == 1)
-    a.write.mode("overwrite").parquet(src)
-    q = run_to_memory(
-        spark, src, SCHEMA, lambda s: stream_rollup_1m(s, watermark="365 days"),
-        "t_rollup_stream", mode="complete",
-    )
-    try:
-        q.processAllAvailable()
-        b.write.mode("append").parquet(src)
-        q.processAllAvailable()
-        got = {
-            (r.series_id, r.bucket_ts): (r.cnt, r.sum, r.min, r.max)
-            for r in spark.sql("select * from t_rollup_stream").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (r.series_id, r.bucket_ts): (r.cnt, r.sum, r.min, r.max)
-        for r in rollup_points(pts, 60).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][0] == want[k][0]
-        assert got[k][1] == pytest.approx(want[k][1], rel=1e-12)
-        assert got[k][2:] == want[k][2:]
 
 
 def test_streaming_stateful_dedup_across_batches(spark, tmpdir):
@@ -414,6 +379,89 @@ def test_stream_to_tier_store_restart_is_exactly_once(spark, tmpdir):
     assert journal["lineage"] == ckpt
     assert set(journal["batches"].values()) == {"committed"}
     assert len(journal["batches"]) == 2
+
+
+def test_tier_store_seeded_late_data_replay(spark, tmpdir, monkeypatch):
+    """One event set replayed through apply_batch_once as seeded random
+    micro-batches (late and out-of-order points, a redelivered committed
+    batch id, a crash between intent and commit) ends bit for bit equal
+    to rollup_points over the distinct events."""
+    import datetime as dtm
+    import shutil
+    from pathlib import Path
+
+    import numpy as np
+
+    from afspark.streaming import stream_tier
+    from afspark.streaming.stream_tier import apply_batch_once, read_tier_store
+
+    rng = np.random.default_rng(20240101)
+    # distinct (series, second) cells: 3 series x 2 days x hours 0 and 23 x
+    # 20 minutes, so buckets hold several points and batches span dates
+    cells = rng.choice(3 * 2 * 2 * 20 * 60, size=300, replace=False)
+    events = []
+    for c in cells.tolist():
+        sid, rest = divmod(c, 2 * 2 * 20 * 60)
+        day, rest = divmod(rest, 2 * 20 * 60)
+        hour, rest = divmod(rest, 20 * 60)
+        ts = dtm.datetime(2024, 1, 1 + day, 23 * hour) + dtm.timedelta(seconds=rest)
+        events.append(("abc"[sid], ts, float(rng.integers(-800, 800)) / 16))
+    cuts = sorted(rng.choice(np.arange(1, len(events)), size=7, replace=False).tolist())
+    batches = [events[a:b] for a, b in zip([0, *cuts], [*cuts, len(events)])]
+    # replay order is the event order above (random in time): later
+    # batches carry points older than already-committed ones
+    assert any(
+        min(t for _, t, _ in b) < max(t for prev in batches[:i] for _, t, _ in prev)
+        for i, b in enumerate(batches) if i
+    )
+
+    store = f"{tmpdir}/tier1m"
+
+    def apply(i):
+        return apply_batch_once(
+            spark, store, spark.createDataFrame(batches[i], SCHEMA), i, 60, lineage="L"
+        )
+
+    assert apply(0) and apply(1) and apply(2)
+    assert apply(1) is False  # redelivered committed batch: skipped
+
+    # crash after batch 3's merge landed, before its commit was journaled
+    class Killed(Exception):
+        pass
+
+    real_refresh = stream_tier.refresh_tier_store
+
+    def merge_then_crash(*args, **kwargs):
+        real_refresh(*args, **kwargs)
+        raise Killed
+
+    monkeypatch.setattr(stream_tier, "refresh_tier_store", merge_then_crash)
+    with pytest.raises(Killed):
+        apply(3)
+    monkeypatch.setattr(stream_tier, "refresh_tier_store", real_refresh)
+    with pytest.raises(RuntimeError, match="dangling intent"):
+        apply(3)
+
+    # remediation: rebuild batch 3's dates from the committed batches' raw
+    # points, clear the entry, and let the redelivery apply it once
+    dates = {t.date() for _, t, _ in batches[3]}
+    for d in dates:
+        shutil.rmtree(Path(store) / f"bucket_date={d}")
+    committed = spark.createDataFrame([e for b in batches[:3] for e in b], SCHEMA)
+    (
+        rollup_points(committed.filter(F.to_date("ts").isin(sorted(dates))), 60)
+        .withColumn("bucket_date", F.to_date("bucket_ts"))
+        .write.mode("append").partitionBy("bucket_date").parquet(store)
+    )
+    journal = stream_tier._read_journal(store)
+    del journal["batches"]["3"]
+    stream_tier._write_journal(store, journal)
+
+    for i in range(3, len(batches)):
+        assert apply(i)
+
+    want = rollup_points(spark.createDataFrame(events, SCHEMA), 60)
+    assert _tier_rows(read_tier_store(spark, store)) == _tier_rows(want)
 
 
 def _write_sample_files(src, series, cuts):
