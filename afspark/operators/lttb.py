@@ -8,8 +8,9 @@ largest triangle with the previously kept point and the next bucket's
 average (Steinarsson 2013, "Downsampling Time Series for Visual
 Representation").
 
-Spark realization: one shuffle keyed by series, then a single Arrow
-pass; inside each group the selection is the standard O(n) numpy sweep.
+Spark realization: one ``_grouped.grouped_map_in_pandas`` pass keyed by
+series (one shuffle, then a single Arrow pass); inside each group the
+selection is the standard O(n) numpy sweep.
 LTTB is inherently sequential per series (each pick depends on the
 previous), so per-series kernel evaluation — NOT a window expression —
 is the right mapping; series are independent, which is the parallelism.
@@ -23,6 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._grouped import grouped_map_in_pandas
 
 OUT_SCHEMA = "series_id string, ts timestamp, value double"
 
@@ -78,37 +81,16 @@ def lttb(
         F.col(ts_col).alias("ts"),
         F.col(value_col).cast("double").alias("value"),
     )
-    n_parts = points.sparkSession.sparkContext.defaultParallelism * 2
-    pre = src.repartition(n_parts, "series_id").sortWithinPartitions(
-        "series_id", "ts"
+
+    def select(g: pd.DataFrame) -> pd.DataFrame:
+        xs = g["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        ys = g["value"].to_numpy(dtype=np.float64)
+        return g.iloc[lttb_numpy(xs.astype(np.float64), ys, threshold)]
+
+    return grouped_map_in_pandas(
+        src, ["series_id"], ["ts"], select, OUT_SCHEMA,
+        n_partitions=points.sparkSession.sparkContext.defaultParallelism * 2,
     )
-
-    def run(batches):
-        carry: pd.DataFrame | None = None
-
-        def select(g: pd.DataFrame) -> pd.DataFrame:
-            xs = g["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-            ys = g["value"].to_numpy(dtype=np.float64)
-            return g.iloc[lttb_numpy(xs.astype(np.float64), ys, threshold)]
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last = pdf["series_id"].iloc[-1]
-            tail = pdf["series_id"] == last
-            carry = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield pd.concat(
-                    [select(g) for _, g in head.groupby("series_id", sort=False)],
-                    ignore_index=True,
-                )
-        if carry is not None and len(carry):
-            yield select(carry)
-
-    return pre.mapInPandas(run, OUT_SCHEMA)
 
 
 def m4_downsample(

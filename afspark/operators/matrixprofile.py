@@ -80,7 +80,6 @@ def matrix_profile_discord(
     keys: list[str] = ["series_id"],
     ts_col: str = "ts",
     value_col: str = "value",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Per-series discord + motif off the bucketed tier: one row per
     series with the argmax/argmin of the matrix profile.
@@ -123,8 +122,6 @@ def matrix_profile_discord(
         *keys, "n_buckets", "n_windows", "discord_idx", "discord_epoch",
         "discord_mp_u", "motif_idx", "motif_nn", "motif_mp_u",
     ]
-    n = n_partitions or points.sparkSession.sparkContext.defaultParallelism
-
     def _emit(pdf: pd.DataFrame) -> pd.DataFrame | None:
         # one numpy conversion per batch + boundary split (per-group
         # pandas construction is ~40x the kernel cost on short series)
@@ -158,5 +155,5 @@ def matrix_profile_discord(
     from ._grouped import grouped_batch_in_pandas
 
     return grouped_batch_in_pandas(
-        tier, list(keys), ["_be"], _emit, out_schema, n_partitions=n
+        tier, list(keys), ["_be"], _emit, out_schema
     )

@@ -8,10 +8,13 @@ Spark twin of the reference's ``Score(f, x; winlen, noverlap)``
 Dataflow (one shuffle + one Arrow hop):
 
   samples(series_id, seq, value)
-    -> assign_chunks            (narrow; halo rows replicated via explode)
-    -> groupBy(series_id,chunk) (the shuffle; key cardinality = series*chunks,
-                                 so hot series still spread across chunks)
-    -> applyInPandas            (Arrow batches -> numpy kernels -> Arrow)
+    -> assign_chunks          (narrow; halo rows replicated via explode)
+    -> grouped_batch_in_pandas on (series_id, chunk)
+                              (operators/_grouped.py: the one explicit-count
+                               shuffle — key cardinality = series*chunks, so
+                               hot series still spread across chunks — then
+                               one mapInPandas pass whose Arrow batches hold
+                               whole chunks: numpy kernels -> Arrow)
 
 Inside each chunk the kernel input windows are zero-copy numpy stride
 views; every float reduction happens in the same numpy code as the local
@@ -29,35 +32,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.kernels import Feature
+from ._grouped import grouped_batch_in_pandas
 from .windows import ChunkSpec, assign_chunks, make_chunk_spec
 
 RESULT_SCHEMA = "series_id string, win_start long, feature string, value double"
-
-
-def _kernel_partitions(spark) -> int:
-    """Partition count for the CPU-bound kernel shuffle.
-
-    Explicit (not AQE-coalesced: AQE sizes by shuffle BYTES, but this
-    stage is CPU-bound per byte).  The multiplier trades per-task
-    fixed overhead (each task pays a Python-worker/Arrow round-trip
-    handshake; waves = multiplier) against skew smoothing.  Earlier
-    rounds tuned this to 4x when the kernels were ~4x more expensive per
-    window; with the pairwise-rank permutation-entropy kernel and
-    column-array assembly, per-task fixed overhead dominates and ONE
-    wave wins (interleaved A/B at sf0.1: 0.79 s vs 0.98 at 2x and 1.38
-    at 4x, consistent across 5 reps).  Skew protection comes from chunk
-    granularity (hundreds of chunks hash across the partitions), not
-    from wave count.  Tunable via AFSPARK_KERNEL_PART_MULT.
-    """
-    import os
-
-    mult = int(os.environ.get("AFSPARK_KERNEL_PART_MULT", "1"))
-    return spark.sparkContext.defaultParallelism * mult
-
-
-_EMPTY_RESULT = pd.DataFrame(
-    {"series_id": [], "win_start": [], "feature": [], "value": []}
-).astype({"series_id": str, "win_start": "int64", "value": "float64"})
 
 
 def _assemble_results(results) -> pd.DataFrame | None:
@@ -191,50 +169,19 @@ def score(
     chunked = assign_chunks(sdf, spec)
     evaluate = _make_evaluator(list(features), spec, fs, preprocess)
 
-    # One shuffle keyed (series, chunk), then ONE Arrow pass per partition
-    # with in-process grouping (groupBy().applyInPandas costs a Python
-    # round-trip per chunk; with thousands of chunks that overhead
-    # dominated kernel compute ~3x).  A chunk's rows may straddle Arrow
-    # batches within the partition -> tail group carried forward.
-    # Partition count is EXPLICIT: AQE coalesces column-only repartitions
-    # by shuffle bytes, but this stage is CPU-bound per byte (kernels), so
-    # byte-based coalescing serializes the work (_kernel_partitions).
-    n_parts = _kernel_partitions(samples.sparkSession)
-    pre = chunked.repartition(n_parts, "series_id", "chunk").sortWithinPartitions(
-        "series_id", "chunk", "seq"
+    def eval_batch(batch: pd.DataFrame) -> pd.DataFrame | None:
+        return _assemble_results(
+            evaluate(key, g)
+            for key, g in batch.groupby(["series_id", "chunk"], sort=False)
+        )
+
+    # The helper's default count (defaultParallelism) is explicit: AQE
+    # coalesces by shuffle bytes, but this stage is CPU-bound per byte, so
+    # byte-coalescing would serialize the kernels.  One wave beats more:
+    # each task pays a fixed Python-worker/Arrow handshake.
+    return grouped_batch_in_pandas(
+        chunked, ["series_id", "chunk"], ["seq"], eval_batch, RESULT_SCHEMA
     )
-
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_sid = pdf["series_id"].iloc[-1]
-            last_ch = pdf["chunk"].iloc[-1]
-            tail = (pdf["series_id"] == last_sid) & (pdf["chunk"] == last_ch)
-            carry = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                out = _assemble_results(
-                    evaluate(key, g)
-                    for key, g in head.groupby(["series_id", "chunk"], sort=False)
-                )
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _assemble_results(
-                [
-                    evaluate(
-                        (carry["series_id"].iloc[0], carry["chunk"].iloc[0]), carry
-                    )
-                ]
-            )
-            if out is not None:
-                yield out
-
-    return pre.mapInPandas(run, RESULT_SCHEMA)
 
 
 def score_pages(
@@ -243,7 +190,6 @@ def score_pages(
     winlen: int,
     noverlap: int = 0,
     fs: float = 1.0,
-    preprocess: Callable[[np.ndarray], np.ndarray] | None = None,
     target_chunk_samples: int = 65_536,
 ) -> DataFrame:
     """Windowed kernels DIRECTLY over page text — the 100TB dataflow.
@@ -273,12 +219,7 @@ def score_pages(
         F.array().cast("array<bigint>")
     )
     routed = src.withColumn("chunk", F.explode(chunks))
-    # explicit count: see score() — kernel stages must not be byte-coalesced
-    n_parts = _kernel_partitions(pages_with_offsets.sparkSession)
-    pre = routed.repartition(n_parts, "series_id", "chunk").sortWithinPartitions(
-        "series_id", "chunk", "off"
-    )
-    dense = _make_dense_evaluator(list(features), spec, fs, preprocess)
+    dense = _make_dense_evaluator(list(features), spec, fs, None)
 
     def eval_group(series_id, chunk, g: pd.DataFrame) -> pd.DataFrame:
         chunk = int(chunk)
@@ -301,37 +242,16 @@ def score_pages(
         vals = (buf.astype(np.float64) - 127.5) / 127.5
         return dense(series_id, chunk, seq0, vals)
 
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_sid = pdf["series_id"].iloc[-1]
-            last_ch = pdf["chunk"].iloc[-1]
-            tail = (pdf["series_id"] == last_sid) & (pdf["chunk"] == last_ch)
-            carry = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                out = _assemble_results(
-                    eval_group(sid, ch, g)
-                    for (sid, ch), g in head.groupby(["series_id", "chunk"], sort=False)
-                )
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _assemble_results(
-                [
-                    eval_group(
-                        carry["series_id"].iloc[0], carry["chunk"].iloc[0], carry
-                    )
-                ]
-            )
-            if out is not None:
-                yield out
+    def eval_batch(batch: pd.DataFrame) -> pd.DataFrame | None:
+        return _assemble_results(
+            eval_group(sid, ch, g)
+            for (sid, ch), g in batch.groupby(["series_id", "chunk"], sort=False)
+        )
 
-    return pre.mapInPandas(run, RESULT_SCHEMA)
+    # the helper's explicit default count, for the AQE reason in score()
+    return grouped_batch_in_pandas(
+        routed, ["series_id", "chunk"], ["off"], eval_batch, RESULT_SCHEMA
+    )
 
 
 def score_wide(score_long: DataFrame) -> DataFrame:

@@ -102,7 +102,6 @@ def sdt_downsample(
     ts_col: str = "ts",
     value_col: str = "value",
     order_col: str | None = None,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Archive each series' swinging-door subset (schema preserved).
 
@@ -133,10 +132,10 @@ def sdt_downsample(
     # row_number-windowed input paid its full window shuffle once inside
     # .rdd.getNumPartitions() and again in the actual query).  At scale
     # the operative knob is spark.sql.shuffle.partitions, which the
-    # deployment sizes to the data; n_partitions overrides per call.
+    # deployment sizes to the data.
     from ._grouped import default_grouped_partitions
 
-    n = n_partitions or default_grouped_partitions(points.sparkSession)
+    n = default_grouped_partitions(points.sparkSession)
 
     def _compress(pdf: pd.DataFrame) -> pd.DataFrame:
         # one numpy conversion per batch + boundary split beats a pandas

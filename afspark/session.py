@@ -42,7 +42,14 @@ def get_session(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     On a real cluster these configs ride through spark-submit unchanged;
     nothing here is local-mode-only.
+
+    An already active session is returned unchanged: a job's ``main()``
+    called in-process must not re-set the caller's runtime SQL confs
+    (``getOrCreate`` would re-apply ``spark.sql.shuffle.partitions``).
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     # Python workers are separate processes: they need the afspark package

@@ -4,8 +4,8 @@ Rolled-up points encode per (series_id, chunk_start) as two binary blobs
 (timestamps + values) plus the row count — the classic TSDB chunk shape
 (registry query ``q_chunk_encode`` and ``bench.py``'s encode leaf).
 
-Encode/decode are Arrow-batched pandas UDF passes (one Python call per
-group/partition, numpy inside) — no per-row Python.
+Encode is one ``_grouped.grouped_batch_in_pandas`` pass keyed by the
+chunk, decode one ``mapInPandas`` pass; numpy inside, no per-row Python.
 
 Timestamp domain: the pandas-UDF boundary converts through nanosecond
 precision, so chunk timestamps must lie in pandas' ns range
@@ -25,6 +25,7 @@ from ..functions.codec import (
     encode_timestamps,
     encode_values,
 )
+from ..operators._grouped import default_grouped_partitions, grouped_batch_in_pandas
 
 CHUNK_SCHEMA = (
     "series_id string, chunk_start long, n long, ts_blob binary, val_blob binary"
@@ -37,7 +38,6 @@ def encode_chunks(
     series_col: str = "series_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """points -> one row per (series, chunk) with encoded blobs.
 
@@ -51,29 +51,6 @@ def encode_chunks(
     ).withColumn(
         "chunk_start",
         (F.floor(F.unix_timestamp("ts") / chunk_seconds) * chunk_seconds).cast("long"),
-    )
-
-    # One shuffle keyed by the chunk key, then a single Arrow pass per
-    # partition with IN-PROCESS grouping.  (groupBy().applyInPandas pays
-    # one Python/Arrow round-trip per chunk — with many tiny chunks that
-    # overhead dominated the encode by ~10x.)  A chunk's rows can span
-    # Arrow batches within the partition, so the tail group of each batch
-    # is carried into the next one.
-    #
-    # Partition count from session conf (defaultParallelism floored at
-    # spark.sql.shuffle.partitions — the deployment's scale knob).  A
-    # blanket x4 factor here cost +45% wall at sf0.1 (128 near-empty
-    # shuffle partitions for a one-core-second encode — A/B'd interleaved
-    # at matched host probes).  The previous
-    # ``points.rdd.getNumPartitions()`` input-tracking term is GONE:
-    # under AQE that call executes any upstream shuffle stages as a real
-    # job just to read the partition count, so inputs that arrive through
-    # an exchange paid their whole upstream plan twice.
-    from ..operators._grouped import default_grouped_partitions
-
-    n_parts = n_partitions or default_grouped_partitions(points.sparkSession)
-    pre = pts.repartition(n_parts, "series_id", "chunk_start").sortWithinPartitions(
-        "series_id", "chunk_start", "ts"
     )
 
     def encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -90,24 +67,15 @@ def encode_chunks(
             rows["val_blob"].append(encode_values(vals))
         return pd.DataFrame(rows)
 
-    def encode_iter(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_sid = pdf["series_id"].iloc[-1]
-            last_cs = pdf["chunk_start"].iloc[-1]
-            tail = (pdf["series_id"] == last_sid) & (pdf["chunk_start"] == last_cs)
-            carry = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield encode_groups(head)
-        if carry is not None and len(carry):
-            yield encode_groups(carry)
-
-    return pre.mapInPandas(encode_iter, CHUNK_SCHEMA)
+    # Partition count from session conf (defaultParallelism floored at
+    # spark.sql.shuffle.partitions — the deployment's scale knob).  A
+    # blanket x4 factor here cost +45% wall at sf0.1 (128 near-empty
+    # shuffle partitions for a one-core-second encode — A/B'd interleaved
+    # at matched host probes).
+    return grouped_batch_in_pandas(
+        pts, ["series_id", "chunk_start"], ["ts"], encode_groups, CHUNK_SCHEMA,
+        default_grouped_partitions(points.sparkSession),
+    )
 
 
 def decode_chunks(chunks: DataFrame) -> DataFrame:

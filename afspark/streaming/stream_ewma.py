@@ -13,8 +13,9 @@ Ordering contract: samples must arrive per series in non-decreasing ts
 order across micro-batches (within a batch they are sorted by
 (ts, value), the batch operator's tie order).  A batch whose earliest ts
 precedes the carried last ts raises rather than emitting silently wrong
-values — arbitrarily late data belongs to the batch OoO path, the same
-Lambda split every streaming op here uses.  Equal timestamps split
+values — arbitrarily late data goes through the batch recompute
+(``tsanalytics.ewma`` / ``holt_linear`` / ``counter_increase``), the
+same Lambda split every streaming op here uses.  Equal timestamps split
 ACROSS micro-batches process in delivery order (the batch engine's
 (ts, value) tie order cannot see batch boundaries); keep tie groups in
 one batch for bit-parity.
@@ -73,7 +74,8 @@ def _carry_per_series(
             raise ValueError(
                 f"series {series_id!r}: batch starts at ts {ts_sec[0]} before "
                 f"carried last ts {last_ts}; late data must go through the "
-                "batch OoO merge path"
+                "batch recompute (tsanalytics.ewma / holt_linear / "
+                "counter_increase)"
             )
         carried, cols = step(carried, pdf, ts_us)
         state.update((*carried, float(ts_sec[-1])))
@@ -131,9 +133,9 @@ def streaming_counter_increase(
     previous sample's value, carried across micro-batches).
 
     Same ordering contract as streaming_ewma: per-series non-decreasing
-    ts across batches (raises otherwise — late data belongs to the batch
-    OoO path); rows sort by (ts, value) within a batch, the batch
-    operator's tie order.  State distinguishes 'no previous sample yet'
+    ts across batches (raises otherwise — late data goes through the batch
+    recompute, ``tsanalytics.counter_increase``); rows sort by (ts, value)
+    within a batch, the batch operator's tie order.  State distinguishes 'no previous sample yet'
     (has_last=False -> null increase, the batch first-row rule) from a
     carried NULL-safe value, mirroring the batch path's struct-wrapped
     lag.
@@ -180,8 +182,8 @@ def streaming_holt(
     delivered in order reproduces the batch output bit-for-bit per batch
     prefix (asserted in tests/test_streaming.py across micro-batch
     cuts).  The ordering contract and late-data ValueError mirror
-    streaming_ewma — arbitrarily late data belongs to the batch OoO
-    path.
+    streaming_ewma — arbitrarily late data goes through the batch
+    recompute (``tsanalytics.holt_linear``).
     """
     if not (0.0 < alpha <= 1.0) or not (0.0 <= beta <= 1.0):
         raise ValueError("require 0 < alpha <= 1 and 0 <= beta <= 1")

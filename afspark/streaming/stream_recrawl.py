@@ -11,7 +11,8 @@ batch lag window would.
 Ordering contract (same Lambda split as every streaming op here):
 crawls must arrive per url in non-decreasing ``warc_ts`` order across
 micro-batches; a batch that starts before the carried last ts raises —
-arbitrarily late crawls belong to the batch OoO path.
+arbitrarily late crawls go through the batch recompute
+(``recrawl.recrawl_deltas``).
 
 Hamming is computed with a vectorized SWAR popcount over the XOR — no
 per-row Python — matching Spark's ``bit_count`` on the full 64-bit
@@ -75,7 +76,7 @@ def streaming_recrawl_deltas(
             raise ValueError(
                 f"url {url!r}: batch starts at ts {ts_sec[0]} before carried "
                 f"last ts {last_ts}; late crawls must go through the batch "
-                "OoO merge path"
+                "recompute (recrawl.recrawl_deltas)"
             )
         sims = pdf[sim_col].to_numpy(np.int64)
         prev = np.empty(len(sims), dtype=np.int64)

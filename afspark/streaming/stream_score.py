@@ -21,8 +21,9 @@ exactly like the batch kernel shuffle; a hot series is a throughput
 concern only (its state does not grow).  At 100 TB state belongs in the RocksDB provider
 (``spark.sql.streaming.stateStore.providerClass``).  Samples must arrive
 in order per series (seq-contiguous); violations raise rather than emit
-silently wrong windows — arbitrarily late points belong to the tier
-store's merge (stream_tier.apply_batch_once).
+silently wrong windows — arbitrarily late samples go through the batch
+recompute: ``score.score_pages`` over the affected pages, merged into the
+tier store with ``stream_tier.apply_batch_once``.
 """
 
 from __future__ import annotations
@@ -70,7 +71,8 @@ def streaming_score(
                 raise ValueError(
                     f"series {series_id!r}: non-contiguous sample stream "
                     f"(expected seq {expected}, got {seqs[0]}); late/out-of-"
-                    "order data must go through the batch OoO merge path"
+                    "order data must go through the batch recompute "
+                    "(score_pages + apply_batch_once)"
                 )
             buf = np.concatenate([buf, pdf["value"].to_numpy(np.float64)])
 

@@ -90,3 +90,68 @@ def test_explicit_partition_count_and_no_per_group_arrow(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
+
+
+def _score_samples(spark):
+    from afspark.functions import kernels as K
+    from afspark.operators.score import score
+    from afspark.sources.pages import derive_samples, generate_pages
+
+    samples = derive_samples(generate_pages(spark, 8))
+    return score(samples, [K.Energy(), K.ZeroCrossingRate()], 96, 32,
+                 fs=1000.0, target_chunk_samples=200)
+
+
+def _score_pages(spark):
+    from afspark.functions import kernels as K
+    from afspark.operators.score import score_pages
+    from afspark.sources.pages import generate_pages, with_series_offsets
+
+    offs = with_series_offsets(generate_pages(spark, 60))
+    return score_pages(offs, [K.Energy(), K.ZeroCrossingRate()], 512, 256,
+                       fs=1000.0, target_chunk_samples=1000)
+
+
+def _points(spark):
+    # 13 series x 90 points a minute apart: 15-minute chunks hold 15 rows,
+    # so every chunk (and every series) spans several 7-row batches
+    import datetime as dtm
+
+    t0 = dtm.datetime(2024, 1, 1)
+    rows = [
+        (f"s{s:02d}", t0 + dtm.timedelta(minutes=i), float((s * 37 + i * 11) % 97))
+        for s in range(13)
+        for i in range(90)
+    ]
+    return spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
+
+
+def _encode_chunks(spark):
+    from afspark.sources.chunkstore import encode_chunks
+
+    return encode_chunks(_points(spark), chunk_seconds=900)
+
+
+def _lttb(spark):
+    from afspark.operators.lttb import lttb
+
+    return lttb(_points(spark), 20)
+
+
+@pytest.mark.parametrize(
+    "build", [_score_samples, _score_pages, _encode_chunks, _lttb],
+    ids=["score", "score_pages", "encode_chunks", "lttb"],
+)
+def test_operators_on_the_grouped_pass_independent_of_batch_size(spark, build):
+    """Each operator folded onto grouped_batch_in_pandas returns the same
+    rows whether its groups fit one Arrow batch or straddle many."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = sorted(build(spark).collect())
+    assert default
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = sorted(build(spark).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert small == default

@@ -46,13 +46,7 @@ def test_kernel_stage_partitions_explicit_not_aqe_coalesced(spark, sf_dir):
     offs = with_series_offsets(generate_pages(spark, 200))
     scored = score_pages(offs, [K.Energy()], 512, 256, fs=1000.0)
     n = scored.rdd.getNumPartitions()
-    import os
-
-    from afspark.operators.score import _kernel_partitions
-
-    assert n == _kernel_partitions(spark)
-    mult = int(os.environ.get("AFSPARK_KERNEL_PART_MULT", "1"))
-    assert n == spark.sparkContext.defaultParallelism * mult
+    assert n == spark.sparkContext.defaultParallelism
 
 
 def test_brute_force_topk_no_full_corpus_window(spark, sf_dir):

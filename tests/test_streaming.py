@@ -716,7 +716,7 @@ def test_stream_ewma_matches_batch_and_sequential(spark, tmpdir):
         # continuing the recurrence out of order
         late = spark.createDataFrame([("a", t0, 0.0)], SCHEMA)
         late.coalesce(1).write.mode("append").parquet(src)
-        with pytest.raises(Exception, match="batch OoO merge path"):
+        with pytest.raises(Exception, match=r"batch recompute \(tsanalytics\.ewma"):
             q.processAllAvailable()
     finally:
         q.stop()
@@ -949,7 +949,7 @@ def test_stream_sliding_distinct_matches_batch(spark, tmpdir):
     # two micro-batches split by TIME: the watermark advances past a
     # window only after every contributing event has arrived (delivering
     # arbitrary out-of-order batches would be legitimately dropped as
-    # late — the batch OoO merge is the escape hatch for that)
+    # late — the batch recompute is the escape hatch for that)
     cut = t0 + dtm.timedelta(minutes=300)
     pts.filter(F.col("ts") < cut).coalesce(1).write.mode(
         "overwrite"

@@ -125,12 +125,6 @@ EXEC_CORES = int(os.environ.get("AFSPARK_EXEC_CORES", "2"))
 
 def run_level(cpus: int, n_pages: int, executors: int | None = None) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-    # 4 task waves instead of 8 through the kernel shuffle: each wave
-    # pays a fixed Python-worker/Arrow handshake, and wave count is
-    # parallelism-invariant (n_parts scales with cores), so fewer waves
-    # directly shrinks the non-scaling floor.  Skew smoothing at 4x is
-    # still ample for the synthetic page distribution.
-    env.setdefault("AFSPARK_KERNEL_PART_MULT", "4")
     if executors is not None:
         env["AFSPARK_MASTER"] = f"local-cluster[{executors},{EXEC_CORES},4096]"
     code = CHILD.format(repo=REPO, n_pages=n_pages,
