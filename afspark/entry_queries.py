@@ -5488,7 +5488,7 @@ def q_serve_range_30d(spark, sf_dir):
     from .operators.rollup import serve_range
 
     pts = events_samples(spark, sf_dir, cents=True)
-    tiers = rollup_all_tiers(pts, materialize=False)
+    tiers = rollup_all_tiers(pts)
     name, px, out = serve_range(
         tiers,
         {k: v for k, v in TIERS.items()},

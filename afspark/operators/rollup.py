@@ -3,15 +3,15 @@
 The reference has no rollup (its tiers analog is SURVEY.md §2.9); these are
 classic TSDB downsamples: each tier holds per-(series, feature, bucket)
 ``cnt/sum/min/max/first/last`` and is computed EITHER from raw points OR by
-re-aggregating the previous tier (tier consistency is tested:
-1h-from-1m == 1h-from-raw, tests/test_rollup.py).
+re-aggregating a finer tier (tier consistency is tested: each coarse
+tier == rollup_tier of the next finer one, tests/test_rollup.py).
 
 Bucketing is pure epoch arithmetic — floor(epoch/sec)*sec — identical in
 Spark and DuckDB (portable for the driver oracle), independent of calendar
 units, and cheap inside whole-stage codegen.  Aggregation is algebraic, so
-Spark performs map-side partial aggregation before the shuffle; at 100TB
-the only shuffle per tier is on (series_id, feature, bucket), and each
-subsequent tier is ~60x smaller than the previous.
+Spark performs map-side partial aggregation before the shuffle;
+``rollup_all_tiers`` expands each point once per tier, so its one shuffle
+on (tier, series_id, bucket) carries each tier's partial aggregates.
 """
 
 from __future__ import annotations
@@ -27,8 +27,9 @@ TIERS: dict[str, int] = {
 }
 
 
-def bucket_ts(ts: Column, tier_seconds: int) -> Column:
-    """floor(epoch(ts)/S)*S as timestamp — portable tumbling bucket."""
+def bucket_ts(ts: Column, tier_seconds: int | Column) -> Column:
+    """floor(epoch(ts)/S)*S as timestamp — portable tumbling bucket (S
+    may be a column: one bucket width per row)."""
     return F.timestamp_seconds(
         (F.floor(F.unix_timestamp(ts) / tier_seconds) * tier_seconds).cast("long")
     )
@@ -36,7 +37,7 @@ def bucket_ts(ts: Column, tier_seconds: int) -> Column:
 
 def rollup_points(
     points: DataFrame,
-    tier_seconds: int,
+    tier_seconds: int | Column,
     keys: list[str] = ["series_id"],
     ts_col: str = "ts",
     value_col: str = "value",
@@ -91,42 +92,32 @@ def rollup_all_tiers(
     ts_col: str = "ts",
     value_col: str = "value",
     tiers: dict[str, int] = TIERS,
-    materialize: bool = True,
 ) -> dict[str, DataFrame]:
-    """Chained tiers: base from raw, every coarser tier from the previous.
+    """Every tier from raw points in ONE aggregate and one checkpoint:
+    each point is expanded once per tier width (``_sec``), grouped by
+    (_sec, keys, bucket_ts), and each returned tier (finest first) is a
+    filter on the checkpointed frame.
 
-    ``materialize`` localCheckpoints each tier (lazily) before deriving
-    the next — without it, lazily consuming tier k re-executes tiers
-    1..k-1 (the base tier would be recomputed once per coarser tier).
-    In production each tier is committed to storage anyway
-    (jobs/rollup_job.py); the checkpoint mirrors that.
-
-    localCheckpoint rather than persist(): a persisted tier keeps the
-    FULL logical plan, so every downstream action re-analyzes and
-    re-optimizes the whole upstream tree (with the fused score pipeline
-    underneath, each coarser tier's trivial count paid ~0.3-0.5 s of
-    driver-side planning — measured interleaved: the four-tier
-    consume sequence dropped from ~2.2 s to ~1.7 s).  The checkpoint
-    truncates lineage to the materialized rows (tier tables are tiny —
-    aggregates, each level ~60x smaller), per guide rule "cut lineage
-    when fault tolerance of the intermediate is not critical"; a lost
-    executor costs a job re-run instead of a lineage recompute, which is
-    the right trade for interactive tier reads (the durable path writes
-    tiers to storage).
+    Catalyst does not push a filter on a generator's output below the
+    ``explode``, so without the checkpoint reading one tier would
+    re-aggregate all of them.  localCheckpoint rather than persist(): a
+    persisted frame keeps the FULL logical plan, so every tier read would
+    re-analyze and re-optimize the fused score pipeline underneath
+    (~0.3-0.5 s of driver planning each).  The checkpoint truncates
+    lineage to the tiny aggregate; a lost executor costs a job re-run
+    instead of a lineage recompute, the right trade for interactive tier
+    reads (the durable path writes tiers to storage, jobs/rollup_job.py).
     """
-    names = sorted(tiers, key=tiers.get)
-    out: dict[str, DataFrame] = {}
-    prev: DataFrame | None = None
-    for name in names:
-        sec = tiers[name]
-        if prev is None:
-            prev = rollup_points(points, sec, keys, ts_col, value_col)
-        else:
-            prev = rollup_tier(prev, sec, keys)
-        if materialize:
-            prev = prev.localCheckpoint(eager=False)
-        out[name] = prev
-    return out
+    # distinct widths: two tier names with one width share its rows
+    secs = sorted(set(tiers.values()))
+    expanded = points.withColumn("_sec", F.explode(F.array(*map(F.lit, secs))))
+    every = rollup_points(
+        expanded, F.col("_sec"), ["_sec", *keys], ts_col, value_col
+    ).localCheckpoint(eager=False)
+    return {
+        name: every.filter(F.col("_sec") == tiers[name]).drop("_sec")
+        for name in sorted(tiers, key=tiers.get)
+    }
 
 
 def ohlc_rollup(
@@ -811,9 +802,9 @@ def score_pages_to_tiers(
     """The north-star pipeline as ONE operator: page text -> windowed
     feature kernels -> every retention tier, FUSED.
 
-    Window scores stream straight into the 1m tier's partial aggregation
-    inside the kernel stage's output (one shuffle chain, no intermediate
-    materialization); coarser tiers re-aggregate the persisted 1m tier.
+    Window scores stream straight into every tier's partial aggregation
+    inside the kernel stage's output (``rollup_all_tiers``: one aggregate,
+    one checkpoint, no intermediate materialization).
     The per-window timestamp is ``origin_epoch + win_start/fs`` and the
     tier series key is ``series_id|feature`` so each feature rolls up as
     its own series.  Equivalent to score_pages + rollup_all_tiers row for
@@ -864,10 +855,12 @@ def audit_tier_consistency(
     Compares the algebraic columns (cnt/sum/min/max) null-safely per
     (keys, bucket): a bucket missing on either side counts as a
     mismatch (first/last are excluded — their tie order is path-
-    dependent under duplicate timestamps, see ohlc_rollup).  Returns one
-    row per key group: buckets checked, buckets mismatched — a clean
-    store reads n_mismatch = 0 everywhere; corruption pinpoints itself
-    (tested by injecting a flipped sum).
+    dependent under duplicate timestamps, see ohlc_rollup).  Sums match
+    to rel 1e-12: a store that took late batches (apply_batch_once) adds
+    in another order than the recompute.  Returns one row per key group:
+    buckets checked, buckets mismatched — a clean store reads
+    n_mismatch = 0 everywhere; corruption pinpoints itself (tested by
+    injecting a flipped sum).
 
     Scale shape: the re-aggregation is the ordinary algebraic tier merge
     (map-side combined), and the diff is an equi-join of two tier-sized
@@ -879,13 +872,15 @@ def audit_tier_consistency(
     a = re.select(*on, *[F.col(c).alias(f"a_{c}") for c in ["cnt", "sum", "min", "max"]])
     b = coarse.select(*on, *[F.col(c).alias(f"b_{c}") for c in ["cnt", "sum", "min", "max"]])
     j = a.join(b, on, "full_outer")
+    sa, sb = F.col("a_sum"), F.col("b_sum")
     ok = (
         F.col("a_cnt").eqNullSafe(F.col("b_cnt"))
-        & F.col("a_sum").eqNullSafe(F.col("b_sum"))
+        & (sa.eqNullSafe(sb) | (F.abs(sa - sb) < 1e-12 * (F.abs(sa) + F.abs(sb))))
         & F.col("a_min").eqNullSafe(F.col("b_min"))
         & F.col("a_max").eqNullSafe(F.col("b_max"))
     )
     return j.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_buckets"),
-        F.sum((~ok).cast("long")).alias("n_mismatch"),
+        # ok is null when one sum is null and the other is not: a mismatch
+        F.sum(F.when(ok, 0).otherwise(1)).alias("n_mismatch"),
     )

@@ -15,7 +15,10 @@ re-aggregates the batch's points together with the committed rows of
 every date the batch touches.  Full tier schema including first/last,
 bounded state (the store is on disk, not in the stream), and arbitrarily
 late data handled by the same associative algebra as
-refresh_tier_incremental.
+refresh_tier_incremental.  A store holds one tier and a batch changes
+only that store: apply each late batch to EVERY tier store, with its
+width (jobs/rollup_job.py), or the coarser stores go stale against
+``rollup.audit_tier_consistency``.
 
 Delivery semantics: foreachBatch may redeliver a batch after a failure;
 the merge is NOT idempotent (counts would double), so batch ids are

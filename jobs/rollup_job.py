@@ -30,6 +30,14 @@ the 1m rows of D, so boundary-straddling windows are computed exactly
 once (equivalence with the fused single-pass pipeline is pytest-asserted,
 tests/test_rollup_job.py).  Coarser tiers re-aggregate the committed
 finer tier, one unit each — they are ~60-3600x smaller.
+
+Late data after the job: merge each late batch into EVERY tier store,
+``apply_batch_once(spark, f"{out}/tier={name}", batch, batch_id,
+TIERS[name])`` per tier.  The coarse stages are single ``all`` units that
+a rerun skips, so a batch merged into ``tier=1m`` alone leaves
+``tier=1h..30d`` stale.  Merged into all of them, each coarse tier stays
+the re-aggregation of the next finer one (the tier algebra is
+associative), which ``rollup.audit_tier_consistency`` checks.
 """
 
 from __future__ import annotations

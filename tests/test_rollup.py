@@ -7,7 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from afspark.operators.gapfill import gapfill
-from afspark.operators.rollup import TIERS, rollup_all_tiers, rollup_points
+from afspark.operators.rollup import (
+    TIERS,
+    rollup_all_tiers,
+    rollup_points,
+    rollup_tier,
+)
 
 UTC = dt.timezone.utc
 
@@ -21,7 +26,9 @@ def points(spark, sf_dir):
 
 
 def test_tier_consistency_1h(spark, points):
-    """1h tier re-aggregated from 1m == 1h tier straight from raw points."""
+    """The 1h tier == rollup_points at 1h, and every coarse tier ==
+    rollup_tier of the next finer tier: the algebra that rollup_job's
+    coarse stages and the tier-store merge rely on."""
     tiers = rollup_all_tiers(points)
     direct = rollup_points(points, TIERS["1h"])
     a = {
@@ -37,6 +44,17 @@ def test_tier_consistency_1h(spark, points):
         assert a[k][0] == b[k][0]
         assert a[k][1] == pytest.approx(b[k][1], rel=1e-12)
         assert a[k][2:] == pytest.approx(b[k][2:], rel=1e-12)
+
+    exact = (0, 2, 3, 7, 8)  # cnt, min, max, first_ts, last_ts; sum/avg reorder
+    names = sorted(TIERS, key=TIERS.get)
+    for fine, coarse in zip(names, names[1:]):
+        a = _tier_map(rollup_tier(tiers[fine], TIERS[coarse]))
+        b = _tier_map(tiers[coarse])
+        assert set(a) == set(b), coarse
+        for k in b:
+            assert [a[k][i] for i in exact] == [b[k][i] for i in exact], (coarse, k)
+            assert a[k][1] == pytest.approx(b[k][1], rel=1e-12), (coarse, k)
+            assert a[k][4] == pytest.approx(b[k][4], rel=1e-12), (coarse, k)
 
 
 def test_all_tiers_counts_conserve(points):
@@ -129,6 +147,59 @@ def test_score_pages_to_tiers_equals_unfused(spark):
         }
         assert got == exp
     offs.unpersist()
+
+
+def test_score_pages_to_tiers_one_aggregate_one_checkpoint(spark, monkeypatch):
+    """Every tier comes from one aggregate behind one localCheckpoint: its
+    plan has exactly one Exchange above the page-routing one (on the tier
+    width, series and bucket), and consuming all four tiers the way the
+    benchmark does runs at most 10 Spark jobs: 2 to build the tiers, 2
+    per consumed tier."""
+    import re
+
+    from afspark.functions import kernels as K
+    from afspark.operators.rollup import score_pages_to_tiers
+    from afspark.sources.pages import generate_pages, with_series_offsets
+
+    offs = with_series_offsets(generate_pages(spark, 300)).persist()
+    offs.count()
+    feats = [K.Energy(), K.ZeroCrossingRate()]
+
+    plans = []
+    checkpoint = type(offs).localCheckpoint
+
+    def record(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(offs), "localCheckpoint", record)
+    sc = spark.sparkContext
+    group = "score-pages-to-tiers-jobs"
+    sc.setJobGroup(group, "four-tier consume of score_pages_to_tiers")
+    try:
+        tiers = score_pages_to_tiers(offs, feats, 512, 256, fs=1000.0)
+        sums = {
+            name: df.agg(F.count(F.lit(1)), F.sum("cnt"), F.sum("sum")).first()
+            for name, df in tiers.items()
+        }
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    offs.unpersist()
+
+    assert list(sums) == ["1m", "1h", "1d", "30d"]
+    assert len({r[1] for r in sums.values()}) == 1  # every tier holds every window
+    assert 0 < len(jobs) <= 10, len(jobs)
+    assert len(plans) == 1, len(plans)
+    lines = plans[0].splitlines()
+    page_routing = r"Exchange hashpartitioning\(series_id#\d+, chunk#\d+L?, \d+\), REPARTITION"
+    routing = [i for i, ln in enumerate(lines) if re.search(page_routing, ln)]
+    assert len(routing) == 1, plans[0]
+    above = [ln for ln in lines[: routing[0]] if re.search(r"\bExchange\b", ln)]
+    assert len(above) == 1, plans[0]
+    assert re.search(
+        r"Exchange hashpartitioning\(_sec#\d+, series_id#\d+, bucket_ts#\d+, \d+\)", above[0]
+    ), above[0]
 
 
 def _tier_map(df):
@@ -829,7 +900,7 @@ def test_serve_range_routing_and_pixel_bound(spark, points):
     from afspark.operators.rollup import rollup_all_tiers, serve_range
 
     pts = points.withColumn("value", F.floor(F.col("value") * 100 + 0.5))
-    tiers = rollup_all_tiers(pts, materialize=False)
+    tiers = rollup_all_tiers(pts)
     t0, t1 = 1_704_067_200, 1_706_659_200  # Jan 1 .. Jan 31
     name, px, out = serve_range(tiers, TIERS, t0, t1, max_points=200)
     assert name == "1h" and px == 14_400  # 30d/200 -> 4h pixels

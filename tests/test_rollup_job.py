@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from afspark.functions import kernels as K
 from afspark.operators.rollup import (
     TIERS,
+    audit_tier_consistency,
     read_tier_range,
     rollup_points,
     score_pages_to_tiers,
@@ -139,9 +140,11 @@ def test_rollup_job_late_batch_and_maintenance_end_to_end(
 ):
     """main() writes every tier in the bucket_date layout equal to the fused
     pipeline; a rerun skips every unit and rewrites nothing; a late batch
-    merges into tier=1m; maintenance_job's retention and clustered
-    compaction leave read_tier_range == a rollup_points recompute of the
-    surviving dates, with at most --target-files files per date."""
+    merged into every tier store keeps each coarse tier equal to the
+    re-aggregation of the next finer one; maintenance_job's retention and
+    clustered compaction leave read_tier_range == a rollup_points
+    recompute of the surviving dates, with at most --target-files files
+    per date."""
     out, ckpt = str(tmpdir.join("tiers")), str(tmpdir.join("ckpt"))
     argv = [*JOB_ARGS, "--out", out, "--checkpoint", ckpt]
     # small files, as a store written by many tasks has
@@ -184,8 +187,19 @@ def test_rollup_job_late_batch_and_maintenance_end_to_end(
         for _ in range(40)
     ]
     late = spark.createDataFrame(late_rows, "series_id string, ts timestamp, value double")
+    # the late-data contract: the batch goes into every tier store, so each
+    # coarse tier stays the re-aggregation of the next finer one
+    for name, sec in TIERS.items():
+        assert apply_batch_once(spark, f"{out}/tier={name}", late, 0, sec)
+    names = sorted(TIERS, key=TIERS.get)
+    for fine, coarse in zip(names, names[1:]):
+        audit = audit_tier_consistency(
+            read_tier_store(spark, f"{out}/tier={fine}"),
+            read_tier_store(spark, f"{out}/tier={coarse}"),
+            TIERS[coarse],
+        )
+        assert audit.agg(F.sum("n_mismatch")).first()[0] == 0, (fine, coarse)
     store_1m = f"{out}/tier=1m"
-    assert apply_batch_once(spark, store_1m, late, 0, TIERS["1m"])
 
     n_files = {
         d.name: len(list(d.glob("*.parquet"))) for d in Path(store_1m).glob("bucket_date=*")

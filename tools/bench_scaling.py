@@ -71,8 +71,8 @@ feats = [
 ]
 
 def one_rep():
-    # FUSED: kernels -> 1m tier in ONE shuffle chain (the production
-    # dataflow); coarser tiers re-aggregate the persisted 1m output.
+    # FUSED: kernels -> every tier in ONE aggregate (the production
+    # dataflow); each tier is a filter on its one checkpoint.
     t0 = time.time()
     tiers = score_pages_to_tiers(offs, feats, 1024, 512, fs=1000.0)
     n_scores = tiers["1m"].agg(F.sum("cnt")).first()[0]
