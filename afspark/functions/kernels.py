@@ -11,11 +11,18 @@ Each feature is a frozen config object with:
   * ``names()``  — output feature labels (fixed arity),
   * ``compute(x, fs)`` — one window -> float64 vector of that arity,
   * ``compute_batch(W, fs)`` — (nwin, winlen) -> (nwin, arity); vectorized
-    where the math allows, otherwise a loop over ``compute``.
+    where the math allows, otherwise a loop over ``compute``,
+  * ``compute_grid(x, i0, step, nwin, winlen, fs)`` — the windows
+    ``x[i0 + k*step : i0 + k*step + winlen]``, k < nwin -> (nwin, arity),
+    bit-identical to ``compute_batch`` over those windows (its base form);
+    PermutationEntropy and StatisticalComplexity override it to code each
+    sample once and share pattern counts across overlapping windows.  The
+    score operators call it through ``score_grid``.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass, field
 from typing import Sequence
@@ -178,6 +185,46 @@ class Feature:
         """(nwin, winlen) -> (nwin, arity); default loops ``compute``."""
         return np.stack([self.compute(w, fs) for w in W], axis=0)
 
+    def compute_grid(
+        self, x: np.ndarray, i0: int, step: int, nwin: int, winlen: int,
+        fs: float = 1.0,
+    ) -> np.ndarray:
+        """The windows ``x[i0 + k*step : i0 + k*step + winlen]``, k < nwin
+        -> (nwin, arity).  Base form: ``compute_batch`` over those windows
+        gathered into one (nwin, winlen) array; kernels that can share work
+        across overlapping windows override it, bit-identically."""
+        return self.compute_batch(grid_windows(x, i0, step, nwin, winlen), fs)
+
+
+def grid_windows(
+    x: np.ndarray, i0: int, step: int, nwin: int, winlen: int
+) -> np.ndarray:
+    """(nwin, winlen) copy of the windows of ``x`` starting at
+    ``i0 + k*step``, k < nwin."""
+    starts = i0 + step * np.arange(nwin, dtype=np.int64)
+    return np.lib.stride_tricks.sliding_window_view(x, winlen)[starts]
+
+
+def score_grid(
+    features: Sequence[Feature], x: np.ndarray, i0: int, step: int, nwin: int,
+    winlen: int, fs: float = 1.0,
+) -> list[np.ndarray]:
+    """Each feature's ``compute_grid`` over one window grid of ``x``.
+
+    The features that keep the base form share one gathered window array
+    (the base form is ``compute_batch`` over it) instead of each gathering
+    its own."""
+    W = None
+    out = []
+    for f in features:
+        if type(f).compute_grid is not Feature.compute_grid:
+            out.append(f.compute_grid(x, i0, step, nwin, winlen, fs))
+            continue
+        if W is None:
+            W = grid_windows(x, i0, step, nwin, winlen)
+        out.append(f.compute_batch(W, fs))
+    return out
+
 
 @dataclass(frozen=True)
 class Energy(Feature):
@@ -310,29 +357,21 @@ class SpectralFlatness(Feature):
             return (g / np.mean(m2, axis=1))[:, None]
 
 
-def _pattern_probs_batch(
-    W: np.ndarray, m: int, tau: int, weighted: bool
-) -> np.ndarray:
-    """Per-window ordinal-pattern probabilities, vectorized across windows.
-
-    Returns a dense (nwin, m**m) matrix of probabilities (zeros for absent
-    patterns) using a base-m digit encoding of the stable argsort — the
-    entropy sums below ignore zeros, so density is harmless for small m.
+def _rank_codes(X: np.ndarray, m: int, tau: int) -> np.ndarray:
+    """Base-m ordinal-pattern code of every m-tuple along the last axis.
 
     The code is computed WITHOUT materializing per-tuple argsorts: with
     stable ties, position j's rank is #{i : x_i < x_j or (x_i == x_j and
     i < j)}, so one ``<=`` comparison per unordered position pair — over
-    strided views of W directly, no (nwin, n, m) tuple gather — yields
+    strided views of X directly, no (..., n, m) tuple gather — yields
     every rank, and ``code = Σ_j j * m**rank_j`` reproduces the stable
     argsort's base-m digit code EXACTLY (the k-th smallest element's
     position j has rank_j == k, i.e. P[k] == j).  Bit-identical to the
-    previous np.argsort form for all inputs including ties (asserted in
-    tests), ~7x faster at the bench shape (m=4, winlen 1024).
+    np.argsort form for all inputs including ties (asserted in tests).
     """
-    nwin, winlen = W.shape
-    n = winlen - tau * m + tau
-    vs = [W[:, k * tau : k * tau + n] for k in range(m)]
-    ranks = [np.zeros((nwin, n), dtype=np.uint8) for _ in range(m)]
+    n = X.shape[-1] - tau * m + tau
+    vs = [X[..., k * tau : k * tau + n] for k in range(m)]
+    ranks = [np.zeros(X.shape[:-1] + (n,), dtype=np.uint8) for _ in range(m)]
     for i in range(m):
         for j in range(i + 1, m):
             b = vs[i] <= vs[j]
@@ -340,17 +379,157 @@ def _pattern_probs_batch(
             b = np.logical_not(b, out=b)
             ranks[i] += b
     pw = (m ** np.arange(m)).astype(np.int64)
-    codes = np.zeros((nwin, n), dtype=np.int64)
+    codes = np.zeros(X.shape[:-1] + (n,), dtype=np.int64)
     for j in range(1, m):  # the j=0 digit contributes 0 to the sum
         codes += j * pw[ranks[j]]
+    return codes
+
+
+# Largest m whose comparison-bit table is small: m(m-1)/2 bits index
+# 2**(m(m-1)/2) entries — 1,024 at m=5, 32,768 at m=6.  Larger m keeps
+# the rank form.
+_CODE_TABLE_MAX_M = 5
+
+
+@functools.lru_cache(maxsize=None)
+def _code_table(m: int) -> np.ndarray:
+    """Base-m pattern code of every comparison-bit word of
+    :func:`_pattern_codes`: the rank form's arithmetic, run once per
+    word instead of once per tuple."""
+    pairs = [(i, j) for i in range(m) for j in range(i + 1, m)]
+    words = np.arange(1 << len(pairs))
+    ranks = np.zeros((m, len(words)), dtype=np.intp)
+    for p, (i, j) in enumerate(pairs):
+        b = (words >> (len(pairs) - 1 - p)) & 1  # the first pair is the top bit
+        ranks[j] += b
+        ranks[i] += 1 - b
+    return (np.arange(m)[:, None] * m**ranks).sum(axis=0)
+
+
+def _comparison_bits(x: np.ndarray, m: int, tau: int) -> np.ndarray:
+    """One bit per position pair (i < j) of every m-tuple along the last
+    axis, set when ``x_i <= x_j``; the first pair lands in the top bit.
+
+    Pair (i, j) of the tuple at t compares the samples at t + i*tau and
+    t + j*tau: the comparison at t + i*tau with gap j - i.  So each of the
+    m-1 gaps is compared once along the whole axis, and every pair reads
+    its bits from a shifted view of its gap's array.
+    """
+    L = x.shape[-1]
+    n = L - tau * (m - 1)
+    le = [None] + [
+        (x[..., : L - d * tau] <= x[..., d * tau :]).view(np.uint8) for d in range(1, m)
+    ]
+    bits = np.zeros(x.shape[:-1] + (n,), dtype=np.uint8 if m <= 4 else np.uint16)
+    for i in range(m):
+        for j in range(i + 1, m):
+            bits <<= 1
+            bits |= le[j - i][..., i * tau : i * tau + n]
+    return bits
+
+
+def _pattern_codes(X: np.ndarray, m: int, tau: int) -> np.ndarray:
+    """Base-m ordinal-pattern code of every m-tuple along the last axis —
+    the same codes as :func:`_rank_codes`, from less work.
+
+    The m(m-1)/2 pairwise ``<=`` bits of a tuple determine its ranks, so
+    they pack into one uint8 (m <= 4) or uint16 (m = 5) word that a
+    2**(m(m-1)/2)-entry table maps to the rank form's code.  Every word
+    has an entry, including the inconsistent ones NaN comparisons make,
+    so the codes match for every input.  At m >= 6 the table would need
+    32,768+ entries, and the rank form runs instead.
+
+    C-contiguous rows are compared as one flat buffer (1-D passes run
+    about twice as fast as strided 2-D ones); the tuples that straddle
+    two rows are then dropped.
+    """
+    L = X.shape[-1]
+    n = L - tau * (m - 1)
+    if m > _CODE_TABLE_MAX_M or n <= 0:
+        return _rank_codes(X, m, tau)
+    table = _code_table(m)
+    if X.ndim < 2 or X.size == 0 or not X.flags.c_contiguous:
+        return table[_comparison_bits(X, m, tau)]
+    flat = _comparison_bits(X.reshape(-1), m, tau)
+    rows = np.lib.stride_tricks.sliding_window_view(flat, n)[::L]
+    return table[rows].reshape(X.shape[:-1] + (n,))
+
+
+def _pattern_probs_batch(
+    W: np.ndarray, m: int, tau: int, weighted: bool
+) -> np.ndarray:
+    """Per-window ordinal-pattern probabilities, vectorized across windows.
+
+    Returns a dense (nwin, m**m) matrix of probabilities (zeros for absent
+    patterns) from one ``bincount`` over the base-m pattern codes of
+    :func:`_pattern_codes` (comparison bits through a lookup table; the
+    rank form at m >= 6), offset per window — the entropy sums below
+    ignore zeros, so density is harmless for small m.
+    """
+    nwin, winlen = W.shape
+    n = winlen - tau * m + tau
+    codes = _pattern_codes(W, m, tau)
     if weighted:
         idx = np.arange(n)[:, None] + tau * np.arange(m)[None, :]
         weights = W[:, idx].var(axis=2, ddof=1).ravel()
     else:
         weights = None
     M = m**m
-    flat = (codes + M * np.arange(nwin)[:, None]).ravel()
-    counts = np.bincount(flat, weights=weights, minlength=M * nwin).reshape(nwin, M)
+    codes += M * np.arange(nwin)[:, None]
+    counts = np.bincount(
+        codes.ravel(), weights=weights, minlength=M * nwin
+    ).reshape(nwin, M)
+    return counts / counts.sum(axis=1, keepdims=True)
+
+
+def _pattern_probs_grid(
+    x: np.ndarray, i0: int, step: int, nwin: int, winlen: int, m: int, tau: int
+) -> np.ndarray:
+    """:func:`_pattern_probs_batch` (unweighted) over the windows
+    ``x[i0 + k*step : i0 + k*step + winlen]``, k < nwin, coding every
+    tuple once instead of once per window that holds it.
+
+    Tuple positions fall into ``step``-wide panes from ``i0``.  Window k's
+    n tuples start in panes k .. k+P-1 (P = ceil(n/step)), which also hold
+    the r = P*step - n positions just past its last tuple.  So its counts
+    are a difference of cumulative pane counts minus those r positions'
+    counts.  The panes count comparison-bit words (m <= 5), and only the
+    per-window counts go through the code table; at m >= 6 they count the
+    rank form's codes.  Counts are integers, so the probabilities equal
+    the per-window form's bit for bit.  Pane slots past the chunk's last
+    tuple hold an extra symbol whose bin is dropped.
+    """
+    n = winlen - tau * (m - 1)
+    P = -(-n // step)
+    npanes = nwin - 1 + P
+    seg = x[i0 : i0 + (nwin - 1) * step + winlen]
+    if m > _CODE_TABLE_MAX_M:
+        table, nsym = None, m**m
+        sym = _rank_codes(seg, m, tau)
+    else:
+        table = _code_table(m)
+        nsym = len(table)
+        sym = _comparison_bits(seg, m, tau)
+    K = nsym + 1
+    panes = np.full((npanes, step), nsym, dtype=np.intp)
+    panes.reshape(-1)[: len(sym)] = sym
+    panes += K * np.arange(npanes)[:, None]
+    cum = np.zeros((npanes + 1, K), dtype=np.intp)
+    np.cumsum(
+        np.bincount(panes.ravel(), minlength=K * npanes).reshape(npanes, K),
+        axis=0,
+        out=cum[1:],
+    )
+    counts = cum[P : P + nwin] - cum[:nwin]
+    r = P * step - n
+    if r:
+        # the last r slots of pane k+P-1, re-offset from pane k+P-1 to row k
+        tail = panes[P - 1 : P - 1 + nwin, step - r :] - K * (P - 1)
+        counts -= np.bincount(tail.ravel(), minlength=K * nwin).reshape(nwin, K)
+    counts = counts[:, :nsym]
+    if table is not None:
+        words, counts = counts, np.zeros((nwin, m**m), dtype=np.intp)
+        np.add.at(counts.T, table, words.T)
     return counts / counts.sum(axis=1, keepdims=True)
 
 
@@ -363,6 +542,13 @@ def _entropy_rows(p: np.ndarray, base2: bool = True) -> np.ndarray:
 
 # vectorized batch path memory guard: nwin * m**m floats
 _PATTERN_BATCH_CELLS = 50_000_000
+
+
+def _grid_shares_panes(nwin: int, step: int, winlen: int, m: int, tau: int) -> bool:
+    """Whether :func:`_pattern_probs_grid` applies: each window holds a
+    tuple, and its pane counts fit the batch path's memory guard."""
+    n = winlen - tau * (m - 1)
+    return n > 0 and (nwin + -(-n // step)) * m**m <= _PATTERN_BATCH_CELLS
 
 
 @dataclass(frozen=True)
@@ -388,7 +574,20 @@ class PermutationEntropy(Feature):
     def compute_batch(self, W, fs=1.0):
         if len(W) * self.m**self.m > _PATTERN_BATCH_CELLS:
             return super().compute_batch(W, fs)
-        probs = _pattern_probs_batch(W, self.m, self.tau, self.weighted)
+        return self._from_probs(
+            _pattern_probs_batch(W, self.m, self.tau, self.weighted)
+        )
+
+    def compute_grid(self, x, i0, step, nwin, winlen, fs=1.0):
+        """Pane-shared counts (:func:`_pattern_probs_grid`); weighted PE
+        sums float weights, so it keeps the base form."""
+        if self.weighted or not _grid_shares_panes(nwin, step, winlen, self.m, self.tau):
+            return super().compute_grid(x, i0, step, nwin, winlen, fs)
+        return self._from_probs(
+            _pattern_probs_grid(x, i0, step, nwin, winlen, self.m, self.tau)
+        )
+
+    def _from_probs(self, probs):
         pe = _entropy_rows(probs)
         if self.normalization:
             pe = pe / math.log2(math.factorial(self.m))
@@ -421,11 +620,20 @@ class StatisticalComplexity(Feature):
         return np.array([pe * js / js_max])
 
     def compute_batch(self, W, fs=1.0):
-        m = self.m
-        if len(W) * m**m > _PATTERN_BATCH_CELLS:
+        if len(W) * self.m**self.m > _PATTERN_BATCH_CELLS:
             return super().compute_batch(W, fs)
-        probs = _pattern_probs_batch(W, m, self.tau, False)
-        n = math.factorial(m)
+        return self._from_probs(_pattern_probs_batch(W, self.m, self.tau, False))
+
+    def compute_grid(self, x, i0, step, nwin, winlen, fs=1.0):
+        """Pane-shared counts (:func:`_pattern_probs_grid`)."""
+        if not _grid_shares_panes(nwin, step, winlen, self.m, self.tau):
+            return super().compute_grid(x, i0, step, nwin, winlen, fs)
+        return self._from_probs(
+            _pattern_probs_grid(x, i0, step, nwin, winlen, self.m, self.tau)
+        )
+
+    def _from_probs(self, probs):
+        n = math.factorial(self.m)
         pe = _entropy_rows(probs) / math.log2(n)
         pu = 1.0 / n
         a = (pu + probs) / 2.0

@@ -16,10 +16,15 @@ Dataflow (one shuffle + one Arrow hop):
                                one mapInPandas pass whose Arrow batches hold
                                whole chunks: numpy kernels -> Arrow)
 
-Inside each chunk the kernel input windows are zero-copy numpy stride
-views; every float reduction happens in the same numpy code as the local
-golden path (functions/kernels.py), which is what makes distributed ==
-local bit-for-bit (tests/test_score_spark.py).
+Inside each chunk the windows start on one contiguous run of the hop
+grid, and ``kernels.score_grid`` evaluates every feature over it: the
+pattern kernels (PermutationEntropy, StatisticalComplexity) code the
+chunk's samples once and share pane counts across overlapping windows;
+every other kernel gets one (nwin, winlen) copy of the windows, gathered
+once per chunk by fancy-indexing a stride view.  Every float reduction
+happens in the same numpy code as the local golden path
+(functions/kernels.py), which is what makes distributed == local
+bit-for-bit (tests/test_score_spark.py).
 """
 
 from __future__ import annotations
@@ -31,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.kernels import Feature
+from ..functions.kernels import Feature, score_grid
 from ._grouped import grouped_batch_in_pandas
 from .windows import ChunkSpec, assign_chunks, make_chunk_spec
 
@@ -77,7 +82,7 @@ def _make_dense_evaluator(
     assemble DataFrames batch-wise via :func:`_assemble_results`.
     """
     winlen, step, span = spec.winlen, spec.step, spec.chunk_span
-    feat_names = [(f, f.names()) for f in features]
+    feat_names = [f.names() for f in features]
 
     def evaluate_dense(series_id, chunk, seq0, vals):
         seq_last = seq0 + len(vals) - 1
@@ -87,12 +92,18 @@ def _make_dense_evaluator(
         starts = starts[(starts >= seq0) & (starts + winlen - 1 <= seq_last)]
         if len(starts) == 0 or len(vals) < winlen:
             return None
-        W = np.lib.stride_tricks.sliding_window_view(vals, winlen)[starts - seq0]
-        if preprocess is not None:
+        if preprocess is None:
+            # starts are one contiguous run on the step grid
+            mats = score_grid(
+                features, vals, int(starts[0] - seq0), step, len(starts), winlen, fs
+            )
+        else:
+            W = np.lib.stride_tricks.sliding_window_view(vals, winlen)[starts - seq0]
             W = np.stack([np.asarray(preprocess(w), dtype=np.float64) for w in W])
+            mats = [feat.compute_batch(W, fs) for feat in features]
         ws, fts, vs = [], [], []
-        for feat, names in feat_names:
-            m = np.asarray(feat.compute_batch(W, fs), dtype=np.float64)
+        for names, m in zip(feat_names, mats):
+            m = np.asarray(m, dtype=np.float64)
             nwin, arity = m.shape
             ws.append(np.repeat(starts, arity))
             fts.append(np.tile(np.asarray(names, dtype=object), nwin))

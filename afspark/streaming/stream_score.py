@@ -8,8 +8,9 @@ micro-batch boundary.  This is arbitrary stateful processing
 carries the tail samples that have not yet completed a window plus the
 next window start, so every window is evaluated exactly once, on exactly
 the samples the batch engine would use — the same numpy kernels
-(``Feature.compute_batch``) on the same float64 arrays, hence bit-exact
-(tested window-for-window against ``score_local``).
+(``kernels.score_grid``, as the batch operator calls them) on the same
+float64 arrays, hence bit-exact (tested window-for-window against
+``score_local``).
 
 Hop arithmetic is the reference's: 1-based starts, step = winlen -
 noverlap, full windows only (src/AcousticFeatures.jl:874,881,888 —
@@ -33,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..functions.kernels import score_grid
 
 OUT_SCHEMA = "series_id string, win_start long, feature string, value double"
 STATE_SCHEMA = "next_start long, buf_start long, buf array<double>"
@@ -82,12 +85,13 @@ def streaming_score(
         )
         out = []
         if len(starts):
-            W = np.lib.stride_tricks.sliding_window_view(buf, winlen)[
-                starts - buf_start
-            ]
+            mats = score_grid(
+                features, buf, int(next_start - buf_start), step, len(starts),
+                winlen, fs,
+            )
             frames = []
-            for f in features:
-                vals = np.asarray(f.compute_batch(W, fs), dtype=np.float64)
+            for f, vals in zip(features, mats):
+                vals = np.asarray(vals, dtype=np.float64)
                 if vals.ndim == 1:
                     vals = vals[:, None]
                 for j, nm in enumerate(f.names()):

@@ -258,6 +258,93 @@ def test_pe_defaults_match():
     assert v1[0, 0] == v2[0, 0]
 
 
+# --- ordinal-pattern codes: lookup table, rank form, pane-shared grid -----------
+
+def _pattern_fixture(rng, shape, kind):
+    """Byte-valued samples (many ties), Gaussian, or bytes with NaNs."""
+    if kind == "gauss":
+        return rng.normal(size=shape)
+    x = rng.integers(0, 6, size=shape).astype(float)
+    if kind == "nan":
+        x[rng.random(shape) < 0.05] = np.nan
+    return x
+
+
+@pytest.mark.parametrize("m", [2, 3, 4, 5])
+@pytest.mark.parametrize("tau", [1, 2])
+def test_pattern_codes_equal_rank_form(m, tau):
+    rng = np.random.default_rng(100 * m + tau)
+    for kind in ("bytes", "gauss", "nan"):
+        X = _pattern_fixture(rng, (7, 97), kind)
+        for arr in (X, X[:, ::-1], X[3]):  # contiguous, strided, 1-D
+            got = K._pattern_codes(arr, m, tau)
+            assert np.array_equal(got, K._rank_codes(arr, m, tau)), kind
+        if kind != "nan":
+            # the rank form is the stable argsort's base-m digit code
+            n = X.shape[1] - tau * (m - 1)
+            tuples = np.stack([X[:, k * tau : k * tau + n] for k in range(m)], -1)
+            perm = np.argsort(tuples, axis=-1, kind="stable")
+            want = (perm * m ** np.arange(m)).sum(axis=-1)
+            assert np.array_equal(K._rank_codes(X, m, tau), want)
+
+
+def test_compute_grid_equals_compute_batch_fuzz():
+    """Seeded fuzz: the pane-shared grid path returns exactly what
+    ``compute_batch`` returns on the gathered windows, for every pattern
+    kernel, at every step from 1 to winlen (NaN-aware equality)."""
+    rng = np.random.default_rng(20_261_020)
+    kinds = ("bytes", "gauss", "nan")
+    for case in range(150):
+        m = int(rng.integers(2, 7))
+        tau = int(rng.integers(1, 3))
+        winlen = int(rng.integers(tau * (m - 1) + 1, 48 if m == 6 else 160))
+        step = int(rng.integers(1, winlen + 1))
+        nwin = int(rng.integers(1, 12))
+        i0 = int(rng.integers(1, 9))
+        x = _pattern_fixture(
+            rng, i0 + (nwin - 1) * step + winlen + int(rng.integers(0, 6)),
+            kinds[case % 3],
+        )
+        W = K.grid_windows(x, i0, step, nwin, winlen)
+        for f in (
+            K.PermutationEntropy(m, tau),
+            K.PermutationEntropy(m, tau, False),
+            K.PermutationEntropy(m, tau, True, True),  # weighted: base form
+            K.StatisticalComplexity(m, tau),
+        ):
+            with np.errstate(divide="ignore", invalid="ignore"):
+                got = f.compute_grid(x, i0, step, nwin, winlen)
+                want = f.compute_batch(W)
+            assert np.array_equal(got, want, equal_nan=True), (case, f, step)
+
+
+def test_dense_evaluator_takes_compute_grid(monkeypatch):
+    """The score operator's chunk evaluator runs PE through
+    ``compute_grid``: with PE's ``compute_batch`` disabled it still returns
+    the ``score_local`` values."""
+    from afspark.operators.score import _make_dense_evaluator
+    from afspark.operators.windows import make_chunk_spec
+
+    rng = np.random.default_rng(5)
+    x = (rng.integers(0, 256, 12_000) - 127.5) / 127.5
+    feats = [K.PermutationEntropy(4), K.Energy()]
+    spec = make_chunk_spec(1024, 512, 4096)
+    want = [K.score_local(f, x, winlen=1024, noverlap=512)[2] for f in feats]
+
+    def refuse(self, W, fs=1.0):
+        raise AssertionError("PE ran compute_batch")
+
+    monkeypatch.setattr(K.PermutationEntropy, "compute_batch", refuse)
+    evaluate = _make_dense_evaluator(feats, spec, 1.0, None)
+    vals = x[: spec.chunk_span + spec.halo]  # chunk 0 plus its halo
+    sid, win_start, feature, value = evaluate("s", 0, 1, vals)
+    nwin = spec.chunk_span // spec.step
+    assert win_start[:nwin].tolist() == (1 + 512 * np.arange(nwin)).tolist()
+    assert set(feature[:nwin]) == {"Permutation Entropy"}
+    assert np.array_equal(value[:nwin], want[0][:nwin, 0])
+    assert np.array_equal(value[nwin:], want[1][:nwin, 0])
+
+
 # --- StatisticalComplexity goldens (runtests.jl:379-400) ----------------------
 
 def test_statistical_complexity_goldens():
